@@ -3,11 +3,12 @@ sketch queries (guide §1.4 noop-sink timing, §1.5 job labels), plus
 row counts of every intermediate so candidate-volume claims in
 OPTIMIZATION_r07.md are measured, not estimated.
 
-NOT part of the frozen driver bench (bench.py). Usage:
+NOT part of the frozen driver bench (bench.py). Usage, with
+SPARK_GRAFT_SF_DIR naming a generated dataset directory:
 
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py minhash
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py simhash
-    SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 python bench_extra.py headline
+    SPARK_GRAFT_SF_DIR=<dataset dir> python bench_extra.py minhash_r7
+    SPARK_GRAFT_SF_DIR=<dataset dir> python bench_extra.py simhash_r7
+    SPARK_GRAFT_SF_DIR=<dataset dir> python bench_extra.py headline
 """
 
 from __future__ import annotations
@@ -18,8 +19,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from fec_cn_support_etl_spark.session import get_spark  # noqa: E402
 
@@ -36,67 +35,6 @@ def timed(spark, label, fn):
     spark.sparkContext.setJobDescription(None)
     print(f"  {label:55s} {dt:8.2f}s" + (f"  -> {out}" if out is not None else ""), flush=True)
     return out, dt
-
-
-def minhash_stages(spark, sf_dir):
-    from fec_cn_support_etl_spark.operators import caching
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingles,
-        jaccard_verify,
-        minhash_lsh_pairs,
-        minhash_signatures,
-        signature_verify,
-        _band_table,
-    )
-    from fec_cn_support_etl_spark.sources.tpch import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    timed(spark, "minhash: doc count", lambda: d.count())
-    sh = caching.cache(char_shingles(d, "doc_id", "text", k=5))
-    timed(spark, "minhash: shingle rows (materialize cache)", lambda: sh.count())
-    sig = caching.cache(minhash_signatures(sh, num_hashes=48))
-    timed(spark, "minhash: signatures (materialize cache)", lambda: sig.count())
-    bt = _band_table(sig, 16)
-    a, b = bt.alias("a"), bt.alias("b")
-    raw = a.join(
-        b,
-        on=[F.col("a.bh") == F.col("b.bh"), F.col("a.id") < F.col("b.id")],
-    ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-    timed(spark, "minhash: RAW band-join pairs (pre-distinct)", lambda: raw.count())
-    cand = minhash_lsh_pairs(sig, bands=16)
-    timed(spark, "minhash: distinct candidates", lambda: cand.count())
-    pruned = signature_verify(cand, sig, threshold=0.45).select("id_a", "id_b")
-    timed(spark, "minhash: post-prune survivors (agree>=0.45)", lambda: pruned.count())
-    out = jaccard_verify(pruned, sh, threshold_frac=(4, 5))
-    timed(spark, "minhash: exact-verify output rows", lambda: out.count())
-    caching.release_all()
-    spark.catalog.clearCache()
-
-
-def simhash_stages(spark, sf_dir):
-    from fec_cn_support_etl_spark.operators import caching
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingles,
-        jaccard_verify,
-        simhash_candidates_probe,
-        simhash_from_hashes,
-    )
-    from fec_cn_support_etl_spark.sources.tpch import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    sh = caching.cache(char_shingles(d, "doc_id", "text", k=5))
-    timed(spark, "simhash: shingle rows (materialize cache)", lambda: sh.count())
-    sims = caching.cache(simhash_from_hashes(sh.withColumnRenamed("sh", "th")))
-    timed(spark, "simhash: simhash rows (materialize cache)", lambda: sims.count())
-    # raw collision volume (pre hamming filter, pre distinct)
-    rawcand = simhash_candidates_probe(sims, 6, max_hamming=None)
-    timed(spark, "simhash: RAW probe-join pairs (no filter, distinct)", lambda: rawcand.count())
-    close = simhash_candidates_probe(sims, 6, max_hamming=11).select("id_a", "id_b")
-    timed(spark, "simhash: hamming<=11 distinct candidates", lambda: close.count())
-    out = jaccard_verify(close, sh, threshold_frac=(4, 5))
-    timed(spark, "simhash: exact-verify output rows", lambda: out.count())
-    caching.release_all()
-    spark.catalog.clearCache()
 
 
 def headline(spark, sf_dir, names=None):
@@ -116,167 +54,6 @@ def headline(spark, sf_dir, names=None):
     print(json.dumps(res))
 
 
-
-
-def minhash_new(spark, sf_dir):
-    """Post-restructure minhash stage isolation + jaccard_verify internals."""
-    from fec_cn_support_etl_spark.operators import caching
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingles,
-        jaccard_verify,
-        minhash_lsh_pruned_pairs,
-        minhash_signatures,
-    )
-    from fec_cn_support_etl_spark.sources.tpch import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    sh = caching.cache(char_shingles(d, "doc_id", "text", k=5))
-    timed(spark, "mh2: shingle rows (materialize cache)", lambda: sh.count())
-    sig = caching.cache(minhash_signatures(sh, num_hashes=48))
-    timed(spark, "mh2: signatures (materialize cache)", lambda: sig.count())
-    pruned = minhash_lsh_pruned_pairs(sig, bands=16, num_hashes=48, threshold=0.45)
-    timed(spark, "mh2: fused prune+distinct candidates", lambda: pruned.count())
-    pruned_c = caching.cache(pruned)
-    timed(spark, "mh2: (cache pruned)", lambda: pruned_c.count())
-    # jaccard_verify internals
-    ids = (
-        pruned_c.select(F.col("id_a").alias("id"))
-        .unionByName(pruned_c.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    timed(spark, "mh2: candidate ids", lambda: ids.count())
-    sets = caching.cache(
-        sh.join(ids, "id", "left_semi")
-        .groupBy("id")
-        .agg(F.collect_list("sh").alias("ss"), F.count("*").alias("n"))
-    )
-    timed(spark, "mh2: sets agg (materialize cache)", lambda: sets.count())
-    sizes = sets.select("id", "n")
-    gated = (
-        pruned_c.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb")), "id_b")
-        .filter(F.least("na", "nb") * 5 >= F.greatest("na", "nb") * 4)
-    )
-    timed(spark, "mh2: size-gate survivors (5*min>=4*max)", lambda: gated.count())
-    out = jaccard_verify(pruned_c, sh, threshold_frac=(4, 5))
-    timed(spark, "mh2: jaccard_verify (current form)", lambda: out.count())
-    caching.release_all()
-    spark.catalog.clearCache()
-
-
-def shingle_flat(spark, sf_dir):
-    """Flat codegen shingle path vs HOF path."""
-    from fec_cn_support_etl_spark.operators.dedup import char_shingles
-    from fec_cn_support_etl_spark.sources.tpch import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    timed(spark, "shingle HOF: count", lambda: char_shingles(d, "doc_id", "text", 5).count())
-    timed(spark, "shingle HOF: noop", lambda: _noop(char_shingles(d, "doc_id", "text", 5)))
-    flat = (
-        d.select(
-            F.col("doc_id").alias("id"),
-            F.col("text"),
-            F.expr("explode(sequence(1, greatest(length(text) - 4, 1))) AS i"),
-        )
-        .select("id", F.expr("xxhash64(substr(text, i, 5)) AS sh"))
-        .groupBy("id", "sh")
-        .agg(F.lit(1))
-        .select("id", "sh")
-    )
-    timed(spark, "shingle flat+groupBy: count", lambda: flat.count())
-    timed(spark, "shingle flat+groupBy: noop", lambda: _noop(flat))
-    old = char_shingles(d, "doc_id", "text", 5)
-    timed(spark, "shingle equivalence symdiff", lambda: old.exceptAll(flat).count() + flat.exceptAll(old).count())
-
-
-def simhash_geom(spark, sf_dir):
-    """Candidate-volume + wall comparison of probe geometries (all cover
-    Hamming<=11 with certainty)."""
-    from fec_cn_support_etl_spark.operators import caching
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingles,
-        simhash_candidates_probe,
-        simhash_from_hashes,
-    )
-    from fec_cn_support_etl_spark.sources.tpch import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    sh = caching.cache(char_shingles(d, "doc_id", "text", k=5))
-    sims = caching.cache(simhash_from_hashes(sh.withColumnRenamed("sh", "th")))
-    timed(spark, "geom: sims (materialize)", lambda: sims.count())
-    g1 = simhash_candidates_probe(sims, 6, max_hamming=11).select("id_a", "id_b")
-    timed(spark, "geom g1 6x11b radius-1 (current): distinct cands", lambda: g1.count())
-
-    def probe2(sims, chunks, radius):
-        base, rem = divmod(64, chunks)
-        widths = [base + 1 if c < rem else base for c in range(chunks)]
-        offsets = [sum(widths[:c]) for c in range(chunks)]
-
-        def chunk_val(c):
-            return f"(shiftright(simhash, {offsets[c]}) & {(1 << widths[c]) - 1})"
-
-        exact_structs = ", ".join(
-            f"named_struct('chunk', {c}, 'cv', {chunk_val(c)})" for c in range(chunks)
-        )
-        exact_rows = sims.select("id", "simhash", F.expr(f"explode(array({exact_structs})) AS c")).select(
-            "id", "simhash", "c.chunk", "c.cv"
-        )
-        flips = {c: [0] for c in range(chunks)}
-        for c in range(chunks):
-            w = widths[c]
-            if radius >= 1:
-                flips[c] += [1 << j for j in range(w)]
-            if radius >= 2:
-                flips[c] += [(1 << i) | (1 << j) for i in range(w) for j in range(i + 1, w)]
-        probe_structs = ", ".join(
-            f"named_struct('chunk', {c}, 'pv', {chunk_val(c)} ^ {f})" for c in range(chunks) for f in flips[c]
-        )
-        probe_rows = sims.select("id", "simhash", F.expr(f"explode(array({probe_structs})) AS c")).select(
-            "id", "simhash", "c.chunk", "c.pv"
-        )
-        a, b = exact_rows.alias("a"), probe_rows.alias("b")
-        cand = a.join(
-            b, on=[F.col("a.chunk") == F.col("b.chunk"), F.col("a.cv") == F.col("b.pv"), F.col("a.id") < F.col("b.id")]
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), F.col("a.simhash").alias("sa"), F.col("b.simhash").alias("sb"))
-        cand = cand.filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 11)
-        return cand.select("id_a", "id_b").distinct()
-
-    g2 = probe2(sims, 4, 2)
-    timed(spark, "geom g2 4x16b radius-2 asym: distinct cands", lambda: g2.count())
-    timed(spark, "geom g2 symdiff vs g1", lambda: g1.exceptAll(g2).count() + g2.exceptAll(g1).count())
-
-    def sym1(sims, chunks):
-        # radius-1 on BOTH sides: covers chunk-distance <= 2, so
-        # `chunks` chunks cover Hamming <= 3*chunks - 1 with certainty
-        base, rem = divmod(64, chunks)
-        widths = [base + 1 if c < rem else base for c in range(chunks)]
-        offsets = [sum(widths[:c]) for c in range(chunks)]
-
-        def chunk_val(c):
-            return f"(shiftright(simhash, {offsets[c]}) & {(1 << widths[c]) - 1})"
-
-        structs = ", ".join(
-            f"named_struct('chunk', {c}, 'cv', {chunk_val(c)} ^ {f})"
-            for c in range(chunks)
-            for f in [0, *(1 << j for j in range(widths[c]))]
-        )
-        rows = sims.select("id", "simhash", F.expr(f"explode(array({structs})) AS c")).select(
-            "id", "simhash", "c.chunk", "c.cv"
-        )
-        a, b = rows.alias("a"), rows.alias("b")
-        cand = a.join(
-            b, on=[F.col("a.chunk") == F.col("b.chunk"), F.col("a.cv") == F.col("b.cv"), F.col("a.id") < F.col("b.id")]
-        ).select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), F.col("a.simhash").alias("sa"), F.col("b.simhash").alias("sb"))
-        cand = cand.filter(F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))) <= 11)
-        return cand.select("id_a", "id_b").distinct()
-
-    g3 = sym1(sims, 4)
-    timed(spark, "geom g3 4x16b radius-1 both: distinct cands", lambda: g3.count())
-    timed(spark, "geom g3 symdiff vs g1", lambda: g1.exceptAll(g3).count() + g3.exceptAll(g1).count())
-    caching.release_all()
-    spark.catalog.clearCache()
-
-
 def minhash_r7(spark, sf_dir):
     """Stage isolation of the round-7 array-form minhash pipeline."""
     from fec_cn_support_etl_spark.operators import caching
@@ -291,15 +68,15 @@ def minhash_r7(spark, sf_dir):
     from fec_cn_support_etl_spark.sources.tpch import load_table, spread
 
     d = spread(load_table(spark, sf_dir, "documents"))
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
+    sets = caching.cache(char_shingle_sets(d, "doc_id", "text"))
     timed(spark, "r7: shingle-set rows (materialize cache)", lambda: sets.count())
-    sig = caching.cache(with_sig_planes(minhash_signatures(explode_shingle_sets(sets), num_hashes=48), 48))
+    sig = caching.cache(with_sig_planes(minhash_signatures(explode_shingle_sets(sets))))
     timed(spark, "r7: signatures (materialize cache)", lambda: sig.count())
-    pruned = minhash_lsh_pruned_pairs(sig, bands=16, num_hashes=48, threshold=0.45)
+    pruned = minhash_lsh_pruned_pairs(sig, bands=16)
     timed(spark, "r7: fused prune+distinct candidates", lambda: pruned.count())
-    out = jaccard_verify_sets(pruned, sets, threshold_frac=(4, 5))
+    out = jaccard_verify_sets(pruned, sets)
     timed(spark, "r7: verify-sets output rows", lambda: out.count())
-    timed(spark, "r7: FULL query (single plan, noop)", lambda: _noop(jaccard_verify_sets(minhash_lsh_pruned_pairs(sig, 16, 48, 0.45), sets, threshold_frac=(4, 5))))
+    timed(spark, "r7: FULL query (single plan, noop)", lambda: _noop(jaccard_verify_sets(minhash_lsh_pruned_pairs(sig, 16), sets)))
     caching.release_all()
     spark.catalog.clearCache()
 
@@ -311,21 +88,21 @@ def simhash_r7(spark, sf_dir):
         char_shingle_sets,
         explode_shingle_sets,
         jaccard_verify_sets,
-        simhash_candidates_probe,
+        simhash_candidates_sym,
         simhash_from_hashes,
     )
     from fec_cn_support_etl_spark.sources.tpch import load_table, spread
 
     d = spread(load_table(spark, sf_dir, "documents"))
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
+    sets = caching.cache(char_shingle_sets(d, "doc_id", "text"))
     timed(spark, "r7s: shingle-set rows (materialize cache)", lambda: sets.count())
     sims = caching.cache(simhash_from_hashes(explode_shingle_sets(sets).withColumnRenamed("sh", "th")))
     timed(spark, "r7s: simhash rows (materialize cache)", lambda: sims.count())
-    raw = simhash_candidates_probe(sims, 6, max_hamming=None)
+    raw = simhash_candidates_sym(sims, 4, max_hamming=None)
     timed(spark, "r7s: RAW probe pairs (no hamming filter, distinct)", lambda: raw.count())
-    close = simhash_candidates_probe(sims, 6, max_hamming=11).select("id_a", "id_b")
+    close = simhash_candidates_sym(sims, 4, max_hamming=11)
     timed(spark, "r7s: hamming<=11 distinct candidates", lambda: close.count())
-    out = jaccard_verify_sets(close, sets, threshold_frac=(4, 5))
+    out = jaccard_verify_sets(close, sets)
     timed(spark, "r7s: verify-sets output rows", lambda: out.count())
     caching.release_all()
     spark.catalog.clearCache()
@@ -338,13 +115,8 @@ def main():
     which = sys.argv[1] if len(sys.argv) > 1 else "headline"
     print(f"== bench_extra {which} @ {sf_dir} ==", flush=True)
     fns = {
-        "minhash": minhash_stages,
-        "simhash": simhash_stages,
-        "minhash_new": minhash_new,
         "minhash_r7": minhash_r7,
         "simhash_r7": simhash_r7,
-        "shingle_flat": shingle_flat,
-        "simhash_geom": simhash_geom,
     }
     if which in fns:
         fns[which](spark, sf_dir)

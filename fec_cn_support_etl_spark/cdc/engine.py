@@ -101,23 +101,6 @@ def lww_dedup(
     )
 
 
-def detect_hot_keys(batch: DataFrame, threshold: float = 0.02, sample_fraction: float | None = None, seed: int = 42) -> DataFrame:
-    """(repo, path) keys above ``threshold`` of (sampled) batch rows.
-
-    Lazy, no single-task stage: the batch total is a 1-row scalar
-    aggregate over the per-key counts, broadcast-cross-joined back —
-    never an unpartitioned window, which would sort every distinct key
-    in ONE task at the billion-key scale this path guards against
-    (operators/skew.py has the general version + rationale)."""
-    s = batch.select(*KEYS)
-    if sample_fraction:
-        s = s.sample(fraction=sample_fraction, seed=seed)
-    counts = s.groupBy(*KEYS).count()
-    total = counts.agg(F.sum("count").alias("__total"))
-    cutoff = F.greatest(F.lit(1).cast("long"), F.floor(F.col("__total") * F.lit(threshold)))
-    return counts.crossJoin(F.broadcast(total)).filter(F.col("count") >= cutoff).select(*KEYS)
-
-
 def enrich_content(df: DataFrame, use_pandas_udf: bool = True) -> DataFrame:
     """content sha256 + lang normalization — the two mandated vectorized
     pandas UDFs (BASELINE.json input_hint). use_pandas_udf=False swaps

@@ -391,14 +391,6 @@ def _agg_stats(per_file: dict) -> dict:
     return out
 
 
-def _dir_stats(bdir: str, stat_cols: list[str]) -> dict:
-    """Manifest-level file statistics from parquet FOOTERS (no Spark
-    job, no data read): per tracked column, the min/max across the
-    directory's row groups — what Iceberg keeps per data file, used to
-    prune whole files at read planning time."""
-    return _agg_stats(_file_stats(bdir, stat_cols))
-
-
 def _file_stats(bdir: str, stat_cols: list[str]) -> dict:
     """Per-FILE footer stats for one bucket directory — recorded by any
     commit whose bucket dir holds more than one file (and always by

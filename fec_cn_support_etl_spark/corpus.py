@@ -16,8 +16,8 @@ corpus where ground truth is known BY CONSTRUCTION:
   near-dup pair (parent_id, doc_id) with char-shingle Jaccard ~ 0.9
   at the default 3% mutation rate.
 
-Used by bench_sketch.py (throughput + N-vs-4N scaling for the sketch
-path) and tests/test_dedup.py (planted-pair recall at small n).
+Used by tests/test_dedup.py (planted-pair recall at small n) and
+tests/test_streaming.py (stream vs batch near-dup pairs).
 """
 
 from __future__ import annotations

@@ -40,12 +40,6 @@ def collapse_duplicates(df: DataFrame, keys: Sequence[str], sum_cols: Sequence[s
     return df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols])
 
 
-def duplicate_key_report(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Diagnostic: keys occurring more than once (reference
-    scripts/merge_support.py:56-76 logging)."""
-    return df.groupBy(*keys).count().filter(F.col("count") > 1)
-
-
 def horizontal_total(
     df: DataFrame,
     parts: Sequence[str],

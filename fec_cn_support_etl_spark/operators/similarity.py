@@ -4,19 +4,16 @@ Two paths, per the scale playbook:
 - brute_force_topk: exact cosine top-k of every query against the
   corpus. Dot products run JVM-side (zip_with + aggregate) inside
   codegen; queries are broadcast. Baseline / ground truth.
-- lsh_bucketed_topk: random-hyperplane LSH. Two plane sources:
-  (a) ``int_planes`` — small-INTEGER-entry hyperplanes applied as a
-  pure Column expression (codegen, no Python). Integer entries make
-  every dot product exactly representable in IEEE double (float32
-  mantissa 24 bits + |entry| <= 4 + 64 terms < 53 bits), so the sum is
-  order-independent and an external SQL engine reproduces the buckets
-  bit-for-bit — this is what lets the driver oracle-check the LSH path.
-  (b) ``hyperplane_bucket_udf`` — gaussian planes via a vectorized
-  pandas UDF (one matmul per Arrow batch), kept for callers that want
-  un-quantized planes.
-  ``multiprobe=r`` additionally probes every bucket within Hamming
-  distance r of the query's bucket (r * bits extra buckets), trading
-  candidate-set size for recall at high ``bits``.
+- lsh_bucketed_topk: random-hyperplane LSH over ``int_planes`` —
+  small-INTEGER-entry hyperplanes applied as a pure Column expression
+  (codegen, no Python). Integer entries make every dot product exactly
+  representable in IEEE double (float32 mantissa 24 bits + |entry| <= 4
+  + 64 terms < 53 bits), so the sum is order-independent and an
+  external SQL engine reproduces the buckets bit-for-bit — this is what
+  lets the driver oracle-check the LSH path. ``multiprobe=r``
+  additionally probes every bucket within Hamming distance r of the
+  query's bucket (r * bits extra buckets), trading candidate-set size
+  for recall at high ``bits``.
 
 At 100 TB the corpus side is partitioned; the broadcast-query pattern
 means NO shuffle of the corpus at all for brute force, and the LSH
@@ -29,8 +26,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import IntegerType
 
 from .windows import topk_per_group
 
@@ -41,10 +36,6 @@ def _dot(a, b):
 
 def _norm(v):
     return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-
-
-def with_norm(df: DataFrame, vec_col: str, out: str = "norm") -> DataFrame:
-    return df.withColumn(out, _norm(F.col(vec_col)))
 
 
 def cosine_col(a, b):
@@ -86,25 +77,6 @@ def brute_force_topk(
         "query_id", "id", cosine_col(F.col("qv"), F.col("v")).alias("cosine")
     )
     return topk_per_group(scored, ["query_id"], _topk_order(rank_scale), k)
-
-
-def hyperplane_bucket_udf(dim: int, bits: int = 8, seed: int = 42):
-    """Vectorized pandas UDF: embedding -> int bucket via sign(P @ v).
-
-    Planes are generated once per executor from a fixed seed (cheap,
-    deterministic — avoids shipping the matrix) and applied with one
-    numpy matmul per Arrow batch: zero per-row Python.
-    """
-
-    @pandas_udf(IntegerType())
-    def bucket(vecs: pd.Series) -> pd.Series:
-        planes = np.random.RandomState(seed).randn(dim, bits)
-        m = np.stack(vecs.apply(np.asarray).to_numpy())
-        signs = (m @ planes) > 0
-        weights = (1 << np.arange(bits)).astype(np.int64)
-        return pd.Series((signs @ weights).astype(np.int32))
-
-    return bucket
 
 
 def int_planes(dim: int, bits: int, seed: int = 42, lo: int = -3, hi: int = 3):
@@ -159,31 +131,24 @@ def lsh_bucketed_topk(
     vec_col: str,
     query_id_col: str,
     query_vec_col: str,
-    dim: int,
+    planes,
     k: int = 10,
-    bits: int = 8,
-    seed: int = 42,
-    planes=None,
     multiprobe: int = 0,
     rank_scale: float | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: compare only within matching
     hyperplane-LSH buckets. Recall < 1; cost ~ (1+multiprobe*bits)/2^bits
-    of brute force.
+    of brute force, with ``bits = len(planes)``.
 
-    ``planes`` (from ``int_planes``) switches bucketing to the exact
-    Column-expression path; default is the pandas-UDF gaussian path.
-    ``multiprobe=r`` probes all buckets within Hamming-r of the query
-    bucket — recovers recall lost to quantization at high ``bits``
-    without touching the corpus side (queries are the exploded side).
+    ``planes`` (from ``int_planes``) bucket through the FP-exact Column
+    expression (see module docstring). ``multiprobe=r`` probes all
+    buckets within Hamming-r of the query bucket — recovers recall lost
+    to quantization at high ``bits`` without touching the corpus side
+    (queries are the exploded side).
     """
-    if planes is not None:
-        bits = len(planes)
-        c_bucket = hyperplane_bucket_expr("v", planes)
-        q_bucket = hyperplane_bucket_expr("qv", planes)
-    else:
-        udf = hyperplane_bucket_udf(dim, bits, seed)
-        c_bucket, q_bucket = udf(F.col("v")), udf(F.col("qv"))
+    bits = len(planes)
+    c_bucket = hyperplane_bucket_expr("v", planes)
+    q_bucket = hyperplane_bucket_expr("qv", planes)
     c = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).withColumn("bucket", c_bucket)
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv")).withColumn(
         "bucket", q_bucket

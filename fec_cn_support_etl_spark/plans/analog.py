@@ -95,31 +95,6 @@ def support_by_candidate(
     return agg
 
 
-def pac_support_analog(spark: SparkSession, sf_dir: str, offices=("S", "P")) -> DataFrame:
-    """Mirror of the CORP vs NONCONNECTED conditional pivot (reference
-    scripts/pac_support_corp_union.py:116-144): one scan, two sums
-    split on l_linestatus."""
-    spine = candidate_spine(spark, sf_dir, offices)
-    fact = _mapped_fact(spark, sf_dir).filter(
-        (F.col("l_returnflag") == "A") & (F.col("l_quantity") > 0) & F.col("linked_cand_id").isNotNull()
-    )
-    valid = semi_filter(fact.withColumnRenamed("linked_cand_id", "cand_id"), spine, "cand_id")
-    piv = conditional_sum_pivot(
-        valid,
-        keys=["cand_id"],
-        amount=dec("l_extendedprice"),
-        buckets={
-            "corp_support_raw": F.col("l_linestatus") == "O",
-            "nonconn_support_raw": F.col("l_linestatus") != "O",
-        },
-    )
-    return piv.select(
-        "cand_id",
-        money(F.col("corp_support_raw")).alias("corp_support"),
-        money(F.col("nonconn_support_raw")).alias("nonconn_support"),
-    )
-
-
 def final_support_analog(spark: SparkSession, sf_dir: str, offices=("S", "P")) -> DataFrame:
     """Mirror of merge_support.main (reference scripts/merge_support.py:
     86-325): candidate spine LEFT JOIN the support categories, fill 0,

@@ -34,20 +34,13 @@ from ..functions.scalar import dec, money
 from ..operators.aggregates import conditional_sum_pivot, horizontal_total
 from ..operators.dedup import (
     char_shingle_sets,
-    char_shingles,
     exact_dup_groups,
     explode_shingle_sets,
-    jaccard_verify,
     jaccard_verify_sets,
-    minhash_lsh_pairs,
-    minhash_lsh_pruned_pairs,
-    minhash_signatures,
-    signature_verify,
-    simhash_candidates,
-    simhash_candidates_probe,
+    minhash_neardup_pairs,
+    neardup_clusters,
     simhash_candidates_sym,
     simhash_from_hashes,
-    with_sig_planes,
 )
 from ..operators import caching
 from ..operators.clustering import kmeans_assign
@@ -1626,32 +1619,9 @@ def minhash_neardup_pairs_q(spark, sf_dir):
     survivors at 0.40, 5.8k at 0.45, identical 256-pair exact output at
     0.40/0.45/0.50), so the exact-verify stage stays tiny. Oracle:
     brute-force all-pairs Jaccard. Scale path unchanged: candidates via
-    uniform band-hash join, exact verify touches candidates only."""
-    d = _ts(spark, sf_dir)
-    # Shingle sets cached as ONE array row per doc (round 7): both
-    # consumers — the signature agg (re-explodes in-pipeline) and the
-    # exact-verify set joins (reads the arrays directly) — share the
-    # cache, and the verify stage's semi-join + collect_list
-    # re-aggregation disappears from the plan. Same bytes, 50k rows
-    # instead of 10.26M at sf1.0. At 100 TB you'd re-derive instead.
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
-    # the signature table is tiny (docs x 48 longs) but feeds both sides
-    # of the band self-join; persisting it avoids recomputing the
-    # shingle scan + 48-min agg per side
-    sig = caching.cache(
-        # planes materialized INTO the cache: computing them in the
-        # band-join stage makes codegen emit a too-large-to-JIT method
-        # (operators/dedup.py::with_sig_planes, round 7)
-        with_sig_planes(minhash_signatures(explode_shingle_sets(sets), num_hashes=48), 48)
-    )
-    # band join + agreement prune FUSED (round 7): the 178M-candidate
-    # distinct + two signature joins never materialize — see
-    # operators/dedup.py::minhash_lsh_pruned_pairs (125.6s -> measured
-    # in OPTIMIZATION_r07.md at sf1.0). Output identical by
-    # construction: agree >= ceil(0.45*48) = 22 is the same predicate
-    # signature_verify evaluated, applied pre- instead of post-distinct.
-    pruned = minhash_lsh_pruned_pairs(sig, bands=16, num_hashes=48, threshold=0.45)
-    return jaccard_verify_sets(pruned, sets, threshold_frac=(4, 5))
+    uniform band-hash join, exact verify touches candidates only.
+    Pipeline: operators/dedup.py::minhash_neardup_pairs."""
+    return minhash_neardup_pairs(_ts(spark, sf_dir), bands=16)
 
 
 @_q("minhash_neardup_pairs_scale")  # rows-only: estimate-grade recall, disclosed below
@@ -1672,49 +1642,37 @@ def minhash_neardup_pairs_scale_q(spark, sf_dir):
     actually runs; recall/precision semantics are pinned by
     tests/test_sketch_scale.py and the driver records a rows-only
     check for this entry by design."""
-    d = _ts(spark, sf_dir)
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
-    sig = caching.cache(
-        # planes materialized INTO the cache: computing them in the
-        # band-join stage makes codegen emit a too-large-to-JIT method
-        # (operators/dedup.py::with_sig_planes, round 7)
-        with_sig_planes(minhash_signatures(explode_shingle_sets(sets), num_hashes=48), 48)
-    )
-    # r = 48/8 = 6 hashes per band; same fused band-join + agree>=22
-    # prune as the guarantee-grade query (round 7)
-    pruned = minhash_lsh_pruned_pairs(sig, bands=8, num_hashes=48, threshold=0.45)
-    return jaccard_verify_sets(pruned, sets, threshold_frac=(4, 5))
+    # r = 48/8 = 6 hashes per band; same prune and verify as the
+    # guarantee-grade query
+    return minhash_neardup_pairs(_ts(spark, sf_dir), bands=8)
 
 
 @_q("simhash_neardup_pairs", _CHAR5_JACCARD_SQL)
 def simhash_neardup_pairs_q(spark, sf_dir):
     """SimHash near-dup pairs, exact output: char-shingle SimHash ->
-    two-level pigeonhole candidates (6 wide chunks + single-bit
-    multi-probe cover Hamming <= 11 with CERTAINTY — measured
+    pigeonhole candidates (4 chunks of 16 bits, single-bit multi-probe
+    on both sides, cover Hamming <= 11 with CERTAINTY — measured
     true-pair Hamming <= 8 across sf0.001-0.1, so the guarantee covers
-    the data with 3 bits of margin, while the 11-bit bucket values cut
-    raw collisions 2.5x vs the old 11-narrow-chunk split: 5.0M -> 2.0M
-    at sf0.1) -> Hamming <= 11 prefilter ALIGNED with the capture
-    guarantee (any kept pair beyond 11 would be collision luck; cuts
-    verify candidates 63.5k -> 2.3k at sf0.1, 28x) -> exact Jaccard
-    4/5 on survivors. Same oracle as minhash: the sketch changes the
-    plan, not the answer."""
+    the data with 3 bits of margin) -> Hamming <= 11 prefilter ALIGNED
+    with the capture guarantee (any kept pair beyond 11 would be
+    collision luck; cuts verify candidates 63.5k -> 2.3k at sf0.1,
+    28x) -> exact Jaccard 4/5 on survivors. Same oracle as minhash: the
+    sketch changes the plan, not the answer."""
     d = _ts(spark, sf_dir)
     # array-form shingle cache shared by the simhash agg and the exact
     # verify, same as minhash_neardup_pairs_q (round 7)
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
+    sets = caching.cache(char_shingle_sets(d, "doc_id", "text"))
     # docs x 1 long — persisted because the chunk join reads it on
     # both sides (same rationale as the minhash signature cache)
     sims = caching.cache(
         simhash_from_hashes(explode_shingle_sets(sets).withColumnRenamed("sh", "th"))
     )
     # round-7 geometry: symmetric single-bit probes over 4x16-bit chunks
-    # — same Hamming<=11 certainty, ~32x thinner buckets (196M -> ~22M
-    # collision rows at sf1.0), single-long packed join key. Candidate
-    # set provably equal to the 6-chunk probe (both = all pairs within
-    # the bound); see operators/dedup.py::simhash_candidates_sym.
+    # — Hamming<=11 certainty, single-long packed join key; the
+    # candidate set is exactly the pairs within the bound, see
+    # operators/dedup.py::simhash_candidates_sym.
     close = simhash_candidates_sym(sims, 4, max_hamming=11)
-    return jaccard_verify_sets(close, sets, threshold_frac=(4, 5))
+    return jaccard_verify_sets(close, sets)
 
 
 @_q(
@@ -1747,20 +1705,7 @@ def neardup_clusters_q(spark, sf_dir):
     recursive-CTE reachability over the same pairs. This is the
     operator a 100-TB corpus dedup actually ends with — keep
     is_canonical, drop the rest."""
-    from ..operators.dedup import neardup_clusters
-
-    d = _ts(spark, sf_dir)
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
-    sig = caching.cache(
-        # planes materialized INTO the cache: computing them in the
-        # band-join stage makes codegen emit a too-large-to-JIT method
-        # (operators/dedup.py::with_sig_planes, round 7)
-        with_sig_planes(minhash_signatures(explode_shingle_sets(sets), num_hashes=48), 48)
-    )
-    # fused band-join + agree>=22 prune (round 7) — identical pair set,
-    # quadratic candidates never shuffled
-    pruned = minhash_lsh_pruned_pairs(sig, bands=16, num_hashes=48, threshold=0.45)
-    pairs = jaccard_verify_sets(pruned, sets, threshold_frac=(4, 5)).select("id_a", "id_b")
+    pairs = minhash_neardup_pairs(_ts(spark, sf_dir), bands=16).select("id_a", "id_b")
     return neardup_clusters(pairs)
 
 
@@ -1853,7 +1798,7 @@ def ann_lsh_bucketed_topk_q(spark, sf_dir):
     # corpus side spread (round 7) — see ann_cosine_topk
     res = lsh_bucketed_topk(
         _ts(spark, sf_dir, "embeddings"), q, "vec_id", "embedding", "vec_id", "embedding",
-        dim=64, k=10, planes=_ANN_PLANES, multiprobe=1, rank_scale=1e6,
+        planes=_ANN_PLANES, k=10, multiprobe=1, rank_scale=1e6,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc(_qcos("cosine")), F.asc("id"))
     return res.withColumn("rank", F.row_number().over(w)).select("query_id", "id", "rank")
@@ -3366,20 +3311,8 @@ def neardup_soft_dedup(spark, sf_dir):
     everything downstream of pair finding touches (doc_id, cluster_id,
     tok) triples only — text never crosses a shuffle after the shingle
     stage; the rollup partial-combines."""
-    from ..operators.dedup import neardup_clusters
-
     d = _ts(spark, sf_dir)
-    sets = caching.cache(char_shingle_sets(d, "doc_id", "text", k=5))
-    sig = caching.cache(
-        # planes materialized INTO the cache: computing them in the
-        # band-join stage makes codegen emit a too-large-to-JIT method
-        # (operators/dedup.py::with_sig_planes, round 7)
-        with_sig_planes(minhash_signatures(explode_shingle_sets(sets), num_hashes=48), 48)
-    )
-    # fused band-join + agree>=22 prune (round 7) — identical pair set,
-    # quadratic candidates never shuffled
-    pruned = minhash_lsh_pruned_pairs(sig, bands=16, num_hashes=48, threshold=0.45)
-    pairs = jaccard_verify_sets(pruned, sets, threshold_frac=(4, 5)).select("id_a", "id_b")
+    pairs = minhash_neardup_pairs(d, bands=16).select("id_a", "id_b")
     memb = neardup_clusters(pairs).select("doc_id", "cluster_id")
     whole = (
         d.select(

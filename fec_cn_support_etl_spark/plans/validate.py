@@ -72,20 +72,6 @@ def check_office_additivity(senate: DataFrame, presidential: DataFrame, total: D
     return ok, {"rows": (n_s, n_p, n_t), "id_overlap": inter, "dollars": (d_s, d_p, d_t)}
 
 
-def check_distribution_shape(df: DataFrame, min_ratio: float = 1.5) -> tuple[bool, float]:
-    """mean/median TOTAL_SUPPORT of funded candidates > 1.5 — right skew
-    (verify_data.py:252-275)."""
-    funded = df.filter(F.col("TOTAL_SUPPORT") > 0)
-    row = funded.agg(
-        F.avg("TOTAL_SUPPORT").alias("mean"),
-        F.percentile_approx("TOTAL_SUPPORT", 0.5).alias("median"),
-    ).collect()[0]
-    if not row["median"]:
-        return False, 0.0
-    ratio = row["mean"] / row["median"]
-    return ratio > min_ratio, ratio
-
-
 def check_intermediate_containment(final: DataFrame, intermediates: dict[str, DataFrame]) -> tuple[bool, dict]:
     """Check 9 (validate_outputs.py:390-408): every CAND_ID appearing
     in an intermediate support table must appear in the funded final

@@ -4,8 +4,8 @@ The training-data shape: documents arrive continuously (crawl batches)
 and every incoming doc must be checked against EVERYTHING already
 ingested — without ever re-running all-pairs. Each micro-batch:
 
-  1. MinHash-sign the new docs (same char-shingle/48-hash/16-band
-     family as the batch pipeline, operators/dedup.py);
+  1. MinHash-sign the new docs (the same char-5-shingle / 48-hash
+     geometry as the batch pipeline, operators/dedup.py);
   2. append (doc, signature) to the accumulated store — written to a
      ``batch={id}`` subdirectory with overwrite, so a re-delivered
      micro-batch after a crash rewrites the same directory instead of
@@ -14,8 +14,9 @@ ingested — without ever re-running all-pairs. Each micro-batch:
   3. LSH-join the NEW band table against the FULL store's band table —
      a pair is examined exactly once, in the micro-batch of its later
      member (new x {old ∪ new}; old x old pairs are never regenerated);
-  4. signature-prune + exact-Jaccard-verify the candidates (the
-     verify stage semi-joins stored shingles down to candidate ids);
+  4. prune the candidates with the batch pipeline's signature-agreement
+     gates, then exact-Jaccard-verify the survivors against shingle
+     sets recomputed from the stored texts;
   5. emit verified pairs to ``pairs/batch={id}`` (same idempotent
      overwrite).
 
@@ -28,7 +29,7 @@ the same brute-force ANSI-SQL oracle checks the streaming path
 Scale notes: per batch, the store grows by one signature row per doc
 (48 longs); the band join is new-batch x store on a uniform hash key
 (skew-free, broadcast-able new side); the exact verify recomputes
-shingles only for candidate ids. At 100 TB you would keep the store in
+shingle sets from the stored texts. At 100 TB you would keep the store in
 a bucketed lake table (cdc/table.py) with periodic compaction and put
 a bloom filter of band hashes in front of the join; the dataflow here
 is unchanged by that swap.
@@ -43,9 +44,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import (
-    _band_table,
+    _pruned_band_join,
     char_shingle_sets,
-    char_shingles,
+    explode_shingle_sets,
     jaccard_verify_sets,
     minhash_signatures,
     with_sig_planes,
@@ -64,11 +65,6 @@ def stream_neardup_pairs(
     spark: SparkSession,
     docs_path: str,
     work_dir: str,
-    k: int = 5,
-    num_hashes: int = 48,
-    bands: int = 16,
-    prune: float = 0.45,
-    threshold_frac: tuple[int, int] = (4, 5),
     max_files_per_trigger: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -79,11 +75,9 @@ def stream_neardup_pairs(
     store = os.path.join(work_dir, "store")
     pairs_dir = os.path.join(work_dir, "pairs")
     checkpoint = os.path.join(work_dir, "checkpoint")
-
-    import math
-
-    min_agree = math.ceil(prune * num_hashes)
-    max_mismatch = num_hashes - min_agree
+    # the guarantee-grade band geometry of the batch query
+    # minhash_neardup_pairs (16 bands x 3 hashes)
+    bands = 16
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         from ..sources.tpch import spread
@@ -95,7 +89,7 @@ def stream_neardup_pairs(
         new = spread(
             batch_df.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
         ).persist()
-        sig_new = minhash_signatures(char_shingles(new, "doc_id", "text", k), num_hashes)
+        sig_new = minhash_signatures(explode_shingle_sets(char_shingle_sets(new, "doc_id", "text")))
         (
             new.join(sig_new.withColumnRenamed("id", "doc_id"), "doc_id")
             .write.mode("overwrite")
@@ -103,54 +97,20 @@ def stream_neardup_pairs(
         )
         # the store INCLUDES this batch, so new-new pairs surface here too
         all_store = spark.read.parquet(store).drop("batch")
-        # same fused three-gate prune as the batch pipeline (round 7,
-        # operators/dedup.py::minhash_lsh_pruned_pairs): bit-plane gates
-        # in/after the band join so the quadratic candidate set never
-        # crosses the distinct, then the exact agreement — identical
-        # survivor set to the old distinct -> signature_verify chain
-        # (agree/48 >= 0.45 <=> agree >= 22, integers).
-        sig_all = with_sig_planes(
-            all_store.select(F.col("doc_id").alias("id"), "sig"), num_hashes
-        ).persist()
-        bt_new = _band_table(
+        # the batch pipeline's three-gate prune (operators/dedup.py::
+        # minhash_lsh_pruned_pairs) over new x store, which needs !=
+        # plus least/greatest instead of the batch self-join's a.id < b.id
+        sig_all = with_sig_planes(all_store.select(F.col("doc_id").alias("id"), "sig")).persist()
+        pruned = _pruned_band_join(
             sig_all.join(sig_new.select("id"), "id", "left_semi"),
+            sig_all,
             bands,
-            keep=["id", "p0", "p1", "p2", "p3"],
+            "a.id != b.id",
+            F.least("a.id", "b.id"),
+            F.greatest("a.id", "b.id"),
         )
-        bt_all = _band_table(sig_all, bands, keep=["id", "p0", "p1", "p2", "p3"])
-        gate1 = " | ".join(f"(a.p{n} ^ b.p{n})" for n in range(4))
-        cand = (
-            bt_new.alias("a")
-            .join(
-                bt_all.alias("b"),
-                # bh embeds the band index — single-long key (round 7)
-                on=[
-                    F.col("a.bh") == F.col("b.bh"),
-                    F.expr(f"a.id != b.id AND bit_count({gate1}) <= {max_mismatch}"),
-                ],
-            )
-            .select(
-                F.least("a.id", "b.id").alias("id_a"),
-                F.greatest("a.id", "b.id").alias("id_b"),
-            )
-        )
-        pl = sig_all.select("id", "p4", "p5", "p6", "p7")
-        pa = pl.select(F.col("id").alias("id_a"), *[F.col(f"p{n}").alias(f"qa{n}") for n in range(4, 8)])
-        pb = pl.select(F.col("id").alias("id_b"), *[F.col(f"p{n}").alias(f"qb{n}") for n in range(4, 8)])
-        gate2 = " | ".join(f"(qa{n} ^ qb{n})" for n in range(4, 8))
-        cand = (
-            cand.join(pa, "id_a")
-            .join(pb, "id_b")
-            .filter(F.expr(f"bit_count({gate2}) <= {max_mismatch}"))
-        )
-        sa = sig_all.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-        sb = sig_all.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-        agree = F.expr(f"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) >= {min_agree}")
-        pruned = (
-            cand.join(sa, "id_a").join(sb, "id_b").filter(agree).select("id_a", "id_b").distinct()
-        )
-        sets_all = char_shingle_sets(all_store, "doc_id", "text", k)
-        out = jaccard_verify_sets(pruned, sets_all, threshold_frac=threshold_frac)
+        sets_all = char_shingle_sets(all_store, "doc_id", "text")
+        out = jaccard_verify_sets(pruned, sets_all)
         out.write.mode("overwrite").parquet(os.path.join(pairs_dir, f"batch={batch_id}"))
         new.unpersist()
         sig_all.unpersist()

@@ -115,14 +115,14 @@ def test_detect_hot_keys_lazy_single_scan(spark, wal):
     count()), and the physical plan contains no SinglePartition
     exchange — an unpartitioned window here would sort every distinct
     key in one task, the exact bottleneck this module exists to avoid."""
-    from fec_cn_support_etl_spark.cdc.engine import detect_hot_keys
+    from fec_cn_support_etl_spark.operators.skew import detect_hot_keys
 
     # one hot key (60% of rows) among a uniform tail
     data = [("hot/repo", "a.py")] * 300 + [(f"r{i % 40}", f"p{i}.py") for i in range(200)]
     batch = spark.createDataFrame(data, ["repo", "path"])
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup())
-    hot = detect_hot_keys(batch, threshold=0.02)
+    hot = detect_hot_keys(batch, ["repo", "path"], threshold=0.02)
     assert set(tracker.getJobIdsForGroup()) == before, "detect_hot_keys ran an eager job"
     import contextlib
     import io
@@ -144,7 +144,7 @@ def test_detect_hot_keys_lazy_single_scan(spark, wal):
     counts = pdf.groupby(["repo", "path"]).size()
     cutoff = max(1, int(len(pdf) * 0.005))
     want = set(counts[counts >= cutoff].index)
-    got = {(r["repo"], r["path"]) for r in detect_hot_keys(wal_batch, threshold=0.005).collect()}
+    got = {(r["repo"], r["path"]) for r in detect_hot_keys(wal_batch, ["repo", "path"], threshold=0.005).collect()}
     assert got == want
 
 

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fec_cn_support_etl_spark.operators import dedup as D
+from sketch_oracle import band_pairs, hamming, py_shingles
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the spark engine "
@@ -28,14 +29,8 @@ def docs(spark):
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
 
-def _py_shingles(text: str, k: int = 5) -> set:
-    if len(text) < k:
-        return {text}
-    return {text[i : i + k] for i in range(len(text) - k + 1)}
-
-
-def _py_jaccard(a: str, b: str, k: int = 5) -> float:
-    sa, sb = _py_shingles(a, k), _py_shingles(b, k)
+def _py_jaccard(a: str, b: str) -> float:
+    sa, sb = py_shingles(a), py_shingles(b)
     return len(sa & sb) / len(sa | sb)
 
 
@@ -52,55 +47,50 @@ def test_exact_dup_groups(spark, docs):
 
 
 def test_minhash_exact_verify_matches_python_jaccard(spark, docs):
-    pairs = D.minhash_dedup_pairs(docs, "doc_id", "text", k=5, num_hashes=64, bands=16, threshold=0.5, verify="exact")
-    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
+    """The exact-pair pipeline returns every pair with char-5 Jaccard
+    >= 4/5, with its exact Jaccard: the duplicate, the one-word edit
+    and its twin; not the 0.76 three-edit doc nor unrelated text."""
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in D.minhash_neardup_pairs(docs, 16).collect()}
     texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    # exact duplicate and near-dup must be found; their exact Jaccard must match
-    assert (0, 1) in got and got[(0, 1)] == pytest.approx(1.0)
-    assert (0, 2) in got and got[(0, 2)] == pytest.approx(_py_jaccard(texts[0], texts[2]), abs=1e-9)
-    # unrelated docs must not pair
-    assert all(not (a in (4, 5) or b in (4, 5)) for a, b in got)
-
-
-def test_minhash_signature_estimate_close_to_exact(spark, docs):
-    est = D.minhash_dedup_pairs(docs, "doc_id", "text", k=5, num_hashes=64, bands=16, threshold=0.5, verify="signature")
-    got = {(r["id_a"], r["id_b"]): r["jaccard_est"] for r in est.collect()}
-    texts = {r["doc_id"]: r["text"] for r in docs.collect()}
-    assert got[(0, 1)] == pytest.approx(1.0)
-    # 64-hash estimate: stderr ~ sqrt(j(1-j)/64) ~ 0.05 -> allow 0.2
-    assert got[(0, 2)] == pytest.approx(_py_jaccard(texts[0], texts[2]), abs=0.2)
+    want = {}
+    for a in texts:
+        for b in texts:
+            j = _py_jaccard(texts[a], texts[b])
+            if a < b and j >= 0.8:
+                want[(a, b)] = j
+    assert set(want) == {(0, 1), (0, 2), (1, 2)}
+    assert got.keys() == want.keys()
+    for pair, j in want.items():
+        assert got[pair] == pytest.approx(j, abs=1e-12)
+    spark.catalog.clearCache()
 
 
 def test_simhash_near_pairs(spark, docs):
     sims = D.simhash(docs, "doc_id", "text")
     by_id = {r["id"]: r["simhash"] for r in sims.collect()}
     assert by_id[0] == by_id[1]  # identical text -> identical simhash
-    pairs = D.simhash_near_pairs(sims, max_hamming=12, chunks=4)
-    got = {(r["id_a"], r["id_b"]): r["hamming"] for r in pairs.collect()}
-    assert got[(0, 1)] == 0
-    assert (0, 2) in got  # one-word change stays within hamming 12
-    # verify hamming against python popcount
-    import collections
-
-    for (a, b), h in got.items():
-        assert bin((by_id[a] ^ by_id[b]) & ((1 << 64) - 1)).count("1") == h
-    _ = collections
+    got = {(r["id_a"], r["id_b"]) for r in D.simhash_candidates_sym(sims, 4, max_hamming=11).collect()}
+    want = {(a, b) for a in by_id for b in by_id if a < b and hamming(by_id[a], by_id[b]) <= 11}
+    assert (0, 1) in got
+    # one-word change stays within hamming 12 (locality of D.simhash)
+    assert hamming(by_id[0], by_id[2]) <= 12
+    assert (0, 2) in got
+    assert got == want
+    # 4 chunks capture Hamming <= 11 with certainty, and no further
+    with pytest.raises(AssertionError):
+        D.simhash_candidates_sym(sims, 4, max_hamming=12)
 
 
 def test_generated_corpus_planted_recall(spark):
     """corpus.gen_documents plants ground-truth near-dup pairs; the
-    end-to-end minhash pipeline (same stages as the catalog query and
-    bench_sketch.py) must recover them all at 2k docs, find only
-    high-Jaccard pairs, and any extras must share a planted parent
-    (sibling dups are genuinely near-dups of each other)."""
+    exact-pair pipeline (the catalog query's operator) must recover
+    them all at 2k docs, find only high-Jaccard pairs, and any extras
+    must share a planted parent (sibling dups are genuinely near-dups
+    of each other)."""
     from fec_cn_support_etl_spark.corpus import gen_documents, planted_pairs
 
     corpus = gen_documents(spark, 2000).persist()
-    sh = D.char_shingles(corpus, "doc_id", "text", k=5)
-    sig = D.minhash_signatures(sh, 48).persist()
-    cand = D.minhash_lsh_pairs(sig, bands=16)
-    pruned = D.signature_verify(cand, sig, threshold=0.45).select("id_a", "id_b")
-    pairs = D.jaccard_verify(pruned, sh, threshold_frac=(4, 5)).persist()
+    pairs = D.minhash_neardup_pairs(corpus, 16).persist()
 
     planted = planted_pairs(corpus)
     n_planted = planted.count()
@@ -141,11 +131,7 @@ def test_neardup_clusters_on_generated_corpus(spark):
     from fec_cn_support_etl_spark.corpus import gen_documents
 
     corpus = gen_documents(spark, 1000).persist()
-    sh = D.char_shingles(corpus, "doc_id", "text", k=5)
-    sig = D.minhash_signatures(sh, 48).persist()
-    cand = D.minhash_lsh_pairs(sig, bands=16)
-    pruned = D.signature_verify(cand, sig, threshold=0.45).select("id_a", "id_b")
-    pairs = D.jaccard_verify(pruned, sh, threshold_frac=(4, 5)).select("id_a", "id_b")
+    pairs = D.minhash_neardup_pairs(corpus, 16).select("id_a", "id_b")
     clusters = D.neardup_clusters(pairs).persist()
 
     joined = clusters.join(corpus, "doc_id").withColumn(
@@ -164,45 +150,6 @@ def test_ngram_jaccard_pairs(spark, docs):
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (0, 1) in got
     assert all(not (a in (4, 5) or b in (4, 5)) for a, b in got)
-
-
-def test_minhash_auto_verify_volume_fallback(spark):
-    """verify='auto' guards the exact-Jaccard stage: oversized docs x
-    many candidates exceed the byte budget -> signature estimate with
-    a disclosed warning (output column jaccard_est); under the budget
-    -> exact path, byte-identical to verify='exact'."""
-    import warnings
-
-    # 40 documents of ~3000 distinct shingles each, all near-dups of one
-    # another => LSH yields O(40^2) candidates; exact verify volume
-    # ~ 780 pairs * 2 * 3000 * 8B ~ 37 MB
-    base = " ".join(f"tok{i:04d}" for i in range(400))
-    rows = [(i, base + f" tail{i}") for i in range(40)]
-    big = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        fb = D.minhash_dedup_pairs(
-            big, "doc_id", "text", num_hashes=32, bands=16, threshold=0.5,
-            verify="auto", max_exact_bytes=1_000_000,
-        )
-        assert any("falling back to signature_verify" in str(w.message) for w in caught)
-    assert "jaccard_est" in fb.columns  # the estimate path, visible in the schema
-    assert fb.count() > 0
-
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        auto = D.minhash_dedup_pairs(
-            big, "doc_id", "text", num_hashes=32, bands=16, threshold=0.5,
-            verify="auto", max_exact_bytes=10_000_000_000,
-        )
-        assert not any("falling back" in str(w.message) for w in caught)
-    assert "jaccard" in auto.columns
-    exact = D.minhash_dedup_pairs(
-        big, "doc_id", "text", num_hashes=32, bands=16, threshold=0.5, verify="exact"
-    )
-    key = lambda df: sorted((r["id_a"], r["id_b"], round(r["jaccard"], 12)) for r in df.collect())
-    assert key(auto) == key(exact)
 
 
 def test_catalog_sweep_releases_sketch_caches(spark):
@@ -251,92 +198,82 @@ def test_catalog_sweep_releases_sketch_caches(spark):
 
 
 def test_pruned_pairs_equivalence(spark):
-    """Round-7 fused prune (bit-plane prefilter + exact agreement,
-    pre-distinct) emits exactly the pair set of the unfused
-    distinct -> signature_verify pipeline, for both band geometries."""
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingles,
-        minhash_lsh_pairs,
-        minhash_lsh_pruned_pairs,
-        minhash_signatures,
-        signature_verify,
-    )
+    """The fused band-join prune emits exactly the pairs a Python brute
+    force finds on sf0.01 (500 docs): the pair shares at least one band
+    slice of the signature AND agrees in >= 22 of 48 positions — for
+    both band geometries."""
     from fec_cn_support_etl_spark.sources.tpch import load_table
 
     d = load_table(spark, "/root/testdata/sf0.01", "documents")
-    sig = minhash_signatures(char_shingles(d, "doc_id", "text", 5), 48).persist()
+    sig = D.with_sig_planes(
+        D.minhash_signatures(D.explode_shingle_sets(D.char_shingle_sets(d, "doc_id", "text")))
+    ).persist()
     try:
+        sigs = {r["id"]: list(r["sig"]) for r in sig.select("id", "sig").collect()}
+        assert D.MIN_AGREE == 22
         for bands in (16, 8):
-            old = signature_verify(minhash_lsh_pairs(sig, bands), sig, 0.45).select(
-                "id_a", "id_b"
-            )
-            new = minhash_lsh_pruned_pairs(sig, bands, 48, 0.45)
-            assert old.exceptAll(new).count() == 0
-            assert new.exceptAll(old).count() == 0
-            assert new.count() > 0  # non-vacuous
+            want = {
+                (a, b)
+                for a, b in band_pairs(sigs, bands)
+                if sum(x == y for x, y in zip(sigs[a], sigs[b])) >= D.MIN_AGREE
+            }
+            got = {(r["id_a"], r["id_b"]) for r in D.minhash_lsh_pruned_pairs(sig, bands).collect()}
+            assert got == want
+            assert want  # non-vacuous
     finally:
         sig.unpersist()
 
 
 def test_verify_sets_equivalence(spark):
-    """Round-7 array-form verify (char_shingle_sets + jaccard_verify_sets)
-    reproduces jaccard_verify's output bit-for-bit: same surviving pairs
-    AND same jaccard values, via both threshold forms."""
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingle_sets,
-        char_shingles,
-        explode_shingle_sets,
-        jaccard_verify,
-        jaccard_verify_sets,
-        minhash_lsh_pruned_pairs,
-        minhash_signatures,
-    )
+    """char_shingle_sets + jaccard_verify_sets over ALL pairs of sf0.01
+    (500 docs) equal a Python brute force on the raw texts: the same
+    distinct shingle count per doc, the same pairs with Jaccard >= 4/5
+    and the same Jaccard values."""
     from fec_cn_support_etl_spark.sources.tpch import load_table
 
     d = load_table(spark, "/root/testdata/sf0.01", "documents")
-    sets = char_shingle_sets(d, "doc_id", "text", 5).persist()
+    texts = {r["doc_id"]: r["text"] for r in d.collect()}
+    py_sets = {i: py_shingles(t) for i, t in texts.items()}
+    sets = D.char_shingle_sets(d, "doc_id", "text").persist()
     try:
-        sh = char_shingles(d, "doc_id", "text", 5)
-        # exploded view over the arrays is row-identical to char_shingles
-        ex = explode_shingle_sets(sets)
-        assert sh.exceptAll(ex).count() == 0
-        assert ex.exceptAll(sh).count() == 0
-        sig = minhash_signatures(ex, 48)
-        pairs = minhash_lsh_pruned_pairs(sig, 16, 48, 0.45).persist()
-        for kw in ({"threshold_frac": (4, 5)}, {"threshold": 0.8}):
-            old = jaccard_verify(pairs, sh, **kw)
-            new = jaccard_verify_sets(pairs, sets, **kw)
-            assert old.exceptAll(new).count() == 0
-            assert new.exceptAll(old).count() == 0
-            assert new.count() > 0  # non-vacuous
-        pairs.unpersist()
+        assert {r["id"]: r["n"] for r in sets.collect()} == {i: len(v) for i, v in py_sets.items()}
+        assert D.explode_shingle_sets(sets).count() == sum(len(v) for v in py_sets.values())
+        ids = sets.select(F.col("id").alias("id_a"))
+        pairs = ids.crossJoin(ids.withColumnRenamed("id_a", "id_b")).filter("id_a < id_b")
+        got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in D.jaccard_verify_sets(pairs, sets).collect()}
+        want = {}
+        for a in py_sets:
+            for b in py_sets:
+                if a < b:
+                    inter = len(py_sets[a] & py_sets[b])
+                    union = len(py_sets[a]) + len(py_sets[b]) - inter
+                    if inter * 5 >= union * 4:
+                        want[(a, b)] = inter / union
+        assert got == want
+        assert want  # non-vacuous
     finally:
         sets.unpersist()
 
 
-def test_sym_probe_equivalence(spark):
-    """Round-7 symmetric 4x16-bit probe emits exactly the candidate set
-    of the 6-chunk radius-1 asymmetric probe under the same
-    max_hamming=11 filter (both geometries cover Hamming<=11 with
-    certainty, so both equal the full within-bound pair set)."""
-    from fec_cn_support_etl_spark.operators.dedup import (
-        char_shingles,
-        simhash_candidates_probe,
-        simhash_candidates_sym,
-        simhash_from_hashes,
-    )
+@pytest.mark.parametrize("max_hamming", [10, 11])
+def test_sym_candidates_match_brute_force(spark, max_hamming):
+    """The symmetric 4x16-bit probe with a Hamming filter inside its
+    certainty bound (<= 11) emits exactly the pairs within that Hamming
+    distance, against Python popcount over all sf0.01 pairs."""
     from fec_cn_support_etl_spark.sources.tpch import load_table
 
     d = load_table(spark, "/root/testdata/sf0.01", "documents")
-    sims = simhash_from_hashes(
-        char_shingles(d, "doc_id", "text", 5).withColumnRenamed("sh", "th")
+    sims = D.simhash_from_hashes(
+        D.explode_shingle_sets(D.char_shingle_sets(d, "doc_id", "text")).withColumnRenamed("sh", "th")
     ).persist()
     try:
-        old = simhash_candidates_probe(sims, 6, max_hamming=11).select("id_a", "id_b")
-        new = simhash_candidates_sym(sims, 4, max_hamming=11)
-        assert old.exceptAll(new).count() == 0
-        assert new.exceptAll(old).count() == 0
-        assert new.count() > 0  # non-vacuous
+        by_id = {r["id"]: r["simhash"] for r in sims.collect()}
+        want = {
+            (a, b) for a in by_id for b in by_id if a < b and hamming(by_id[a], by_id[b]) <= max_hamming
+        }
+        got = {(r["id_a"], r["id_b"]) for r in D.simhash_candidates_sym(sims, 4, max_hamming).collect()}
+        assert got == want
+        assert want  # non-vacuous
     finally:
         sims.unpersist()
 

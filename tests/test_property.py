@@ -123,45 +123,48 @@ def test_lww_dedup_matches_pandas(spark, rows):
 
 # --------------------------------------------------- exact jaccard verify
 
-docs_strategy = st.lists(
-    st.text(alphabet="ab c", min_size=1, max_size=40),
-    min_size=2,
-    max_size=8,
+_ALPHA = "abcd e"
+
+
+def _with_edits(base: str, edits: list) -> list:
+    """base plus one copy per (position, insert) edit of it."""
+    return [base] + [base[: p % (len(base) + 1)] + ins + base[p % (len(base) + 1) :] for p, ins in edits]
+
+
+# a base text and small single-insert edits of it: the pair Jaccards
+# straddle the 4/5 verify threshold, so both sides of it are exercised
+near_dup_docs = st.builds(
+    _with_edits,
+    st.text(alphabet=_ALPHA, min_size=20, max_size=60),
+    st.lists(st.tuples(st.integers(0, 60), st.text(alphabet=_ALPHA, max_size=4)), min_size=1, max_size=7),
 )
 
 
 @SETTINGS
-@given(texts=docs_strategy)
+@given(texts=near_dup_docs)
 def test_jaccard_verify_exact_on_all_pairs(spark, texts):
-    """jaccard_verify over ALL candidate pairs == python set Jaccard of
-    char-5-shingle sets (xxhash64 collisions are ~2^-64, i.e. never on
-    these sizes)."""
-    from fec_cn_support_etl_spark.operators.dedup import char_shingles, jaccard_verify
+    """jaccard_verify_sets over ALL candidate pairs == python set
+    Jaccard of char-5-shingle sets at the VERIFY_FRAC threshold
+    (xxhash64 collisions are ~2^-64, i.e. never on these sizes)."""
+    from fec_cn_support_etl_spark.operators.dedup import VERIFY_FRAC, char_shingle_sets, jaccard_verify_sets
+    from sketch_oracle import py_shingles
 
-    k = 5
-    sets = []
-    for t in texts:
-        if len(t) <= k:
-            sets.append({t})
-        else:
-            sets.append({t[i : i + k] for i in range(len(t) - k + 1)})
+    num, den = VERIFY_FRAC
+    sets = [py_shingles(t) for t in texts]
     want = {}
     for i in range(len(texts)):
         for j in range(i + 1, len(texts)):
             inter = len(sets[i] & sets[j])
             union = len(sets[i] | sets[j])
-            if inter * 2 >= union:  # threshold 1/2
+            if inter * den >= union * num:
                 want[(i, j)] = inter / union
 
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], ["doc_id", "text"])
-    sh = char_shingles(df, "doc_id", "text", k=k)
+    ss = char_shingle_sets(df, "doc_id", "text")
     pairs = spark.createDataFrame(
         [(i, j) for i in range(len(texts)) for j in range(i + 1, len(texts))], ["id_a", "id_b"]
     )
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in jaccard_verify(pairs, sh, threshold_frac=(1, 2)).collect()
-    }
+    got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jaccard_verify_sets(pairs, ss).collect()}
     assert got == want
 
 

@@ -48,7 +48,7 @@ def test_lsh_bucketed_recall(spark, emb, emb_np):
     sane output shape; recall vs brute force reported, floor asserted."""
     ids, mat = emb_np
     queries = emb.filter(F.col("vec_id") < 10)
-    res = S.lsh_bucketed_topk(emb, queries, "vec_id", "embedding", "vec_id", "embedding", dim=64, k=10, bits=2)
+    res = S.lsh_bucketed_topk(emb, queries, "vec_id", "embedding", "vec_id", "embedding", S.int_planes(64, 2), k=10)
     got = {}
     for r in res.collect():
         got.setdefault(r["query_id"], set()).add(r["id"])
@@ -64,7 +64,7 @@ def test_lsh_bucketed_recall(spark, emb, emb_np):
 def _lsh_recalls(spark, emb, emb_np, n_q=10, **kw):
     ids, mat = emb_np
     queries = emb.filter(F.col("vec_id") < n_q)
-    res = S.lsh_bucketed_topk(emb, queries, "vec_id", "embedding", "vec_id", "embedding", dim=64, k=10, **kw)
+    res = S.lsh_bucketed_topk(emb, queries, "vec_id", "embedding", "vec_id", "embedding", k=10, **kw)
     got = {}
     for r in res.collect():
         got.setdefault(r["query_id"], set()).add(r["id"])

@@ -11,23 +11,23 @@ weak #2 / next-round #2):
 - The r=6 geometry must actually deliver the candidate-volume collapse
   that motivates it (~70x analytic at j_bg=0.3; >= 5x asserted
   conservatively, 218x measured at sf0.1).
-- ``simhash_candidates_probe`` (6 wide chunks + single-bit multi-probe)
-  must capture EVERY pair with Hamming <= 11 — the certainty guarantee
-  the oracle-exact simhash catalog query leans on.
+- ``simhash_candidates_sym`` (4 chunks of 16 bits + single-bit
+  multi-probe on both sides) must capture EVERY pair with Hamming
+  <= 11 — the certainty guarantee the oracle-exact simhash catalog
+  query leans on.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from fec_cn_support_etl_spark.operators.dedup import (
-    char_shingles,
-    minhash_lsh_pairs,
+    char_shingle_sets,
+    explode_shingle_sets,
     minhash_signatures,
-    simhash_candidates_probe,
+    simhash_candidates_sym,
 )
 from fec_cn_support_etl_spark.plans import catalog
 from fec_cn_support_etl_spark.sources.tpch import load_table
+from sketch_oracle import band_pairs
 
 
 def _pairs(df):
@@ -55,14 +55,11 @@ def test_scale_mode_subset_with_high_recall(spark, sf_dir):
 
 def test_scale_geometry_cuts_candidate_volume(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    sh = char_shingles(d, "doc_id", "text", k=5).persist()
-    try:
-        sig = minhash_signatures(sh, 48).persist()
-        n_guarantee = minhash_lsh_pairs(sig, bands=16).count()
-        n_scale = minhash_lsh_pairs(sig, bands=8).count()
-        sig.unpersist()
-    finally:
-        sh.unpersist()
+    sig = minhash_signatures(explode_shingle_sets(char_shingle_sets(d, "doc_id", "text")))
+    sigs = {r["id"]: list(r["sig"]) for r in sig.collect()}
+    # distinct pairs colliding in at least one band, before any prune
+    n_guarantee = len(band_pairs(sigs, 16))
+    n_scale = len(band_pairs(sigs, 8))
     # the whole point of r=6: background band collisions collapse
     # (measured: 1.79M -> 8.2k at sf0.1, 218x; assert conservatively)
     assert n_scale * 5 <= n_guarantee, (n_scale, n_guarantee)
@@ -81,33 +78,13 @@ def test_probe_candidates_capture_hamming_le_11(spark):
             v ^= 1 << p
         docs.append((d, v))
     sims = spark.createDataFrame(docs, "id long, simhash long")
-    got = _pairs(simhash_candidates_probe(sims, super_chunks=6))
+    got = _pairs(simhash_candidates_sym(sims, chunks=4))
     for d, k in enumerate(range(1, 14), start=1):
-        if k <= 11:  # certainty region: 6 chunks, <= 1 error in some chunk
+        if k <= 11:  # certainty region: 4 chunks, <= 2 errors in some chunk
             assert (0, d) in got, f"hamming-{k} pair missed — guarantee broken"
     # sanity: the prefilter arg threads through
-    filtered = simhash_candidates_probe(sims, super_chunks=6, max_hamming=4)
+    filtered = simhash_candidates_sym(sims, chunks=4, max_hamming=4)
     assert all(
         r["id_b"] <= 4 or r["id_a"] != 0
         for r in filtered.select("id_a", "id_b").collect()
     )
-
-
-def test_probe_candidates_match_narrow_chunk_pairs(spark, sf_dir):
-    """On real fixture data the probe geometry and the legacy 11-narrow-
-    chunk split must agree on every pair within the shared certainty
-    region (Hamming <= 10)."""
-    from fec_cn_support_etl_spark.operators.dedup import (
-        simhash_candidates,
-        simhash_from_hashes,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    sh = char_shingles(d, "doc_id", "text", k=5)
-    sims = simhash_from_hashes(sh.withColumnRenamed("sh", "th")).persist()
-    try:
-        old = _pairs(simhash_candidates(sims, chunks=11, max_hamming=10))
-        new = _pairs(simhash_candidates_probe(sims, super_chunks=6, max_hamming=10))
-    finally:
-        sims.unpersist()
-    assert old == new

@@ -102,14 +102,11 @@ def test_stream_neardup_matches_batch_pipeline(spark, tmp_path):
     docs_dir = str(tmp_path / "docs")
     gen_documents(spark, 1500).repartition(8).write.parquet(docs_dir)
 
-    # batch reference (same stages as the minhash catalog query)
+    # batch reference (the minhash catalog query's operator)
     corpus = spark.read.parquet(docs_dir)
-    sh = D.char_shingles(corpus, "doc_id", "text", k=5)
-    sig = D.minhash_signatures(sh, 48).persist()
-    pruned = D.signature_verify(D.minhash_lsh_pairs(sig, bands=16), sig, threshold=0.45).select("id_a", "id_b")
     want = {
         (r["id_a"], r["id_b"], r["jaccard"])
-        for r in D.jaccard_verify(pruned, sh, threshold_frac=(4, 5)).collect()
+        for r in D.minhash_neardup_pairs(corpus, 16).collect()
     }
     spark.catalog.clearCache()
 
