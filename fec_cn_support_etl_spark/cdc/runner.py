@@ -103,10 +103,8 @@ def replay(
     table_dir: str,
     n_buckets: int = 64,
     n_salts: int = 0,
-    use_pandas_udf: bool = True,
     metrics_dir: str | None = None,
     stop_after: int | None = None,
-    pipelined: bool = True,
     vacuum_every: int | None = None,
     mode: str = "cow",
     compact_every: int | None = None,
@@ -118,11 +116,11 @@ def replay(
 ) -> dict:
     """Apply every pending epoch; returns summary incl. events/sec.
 
-    ``pipelined=True`` overlaps epoch k+1's parallel phase (dedup +
-    enrich + persist, engine.prepare_epoch) with epoch k's serialized
-    merge/commit — Spark schedules both job sets concurrently, hiding
-    the commit tail behind the next epoch's compute. Commits still
-    happen strictly in epoch order.
+    Each epoch's parallel phase (dedup + enrich + stats,
+    engine.prepare_epoch) runs in a prepare thread, epoch k+1's while
+    epoch k merges and commits — Spark schedules both job
+    sets concurrently, hiding the commit tail behind the next epoch's
+    compute. Commits still happen strictly in epoch order.
 
     ``vacuum_every=N`` runs table maintenance (vacuum keeping the
     latest snapshot) after every N applied epochs — bounds superseded
@@ -166,17 +164,7 @@ def replay(
             )
             exp_metrics[str(ep)] = m
             n = m["_rows_in"] - m["_rows_dropped"]
-        prep = prepare_epoch(
-            spark,
-            table,
-            batch,
-            str(ep),
-            n_salts=n_salts,
-            use_pandas_udf=use_pandas_udf,
-            eager_stats=metrics_dir is not None,  # per-bucket metrics need the stats job
-            mode=mode,
-        )
-        return ep, n, prep
+        return ep, n, prepare_epoch(spark, table, batch, str(ep), n_salts=n_salts, mode=mode)
 
     def _finish(ep, n, prep):
         nonlocal applied, total_events
@@ -198,7 +186,7 @@ def replay(
             removed = table.vacuum(keep_last=1)
             log(f"vacuum after epoch {ep}: {removed} superseded data dirs removed")
 
-    if pipelined and len(epochs) > 1:
+    if epochs:
         with ThreadPoolExecutor(max_workers=1, thread_name_prefix="cdc-prepare") as pool:
             fut = pool.submit(_prepare, epochs[0])
             for nxt in epochs[1:]:
@@ -206,9 +194,6 @@ def replay(
                 fut = pool.submit(_prepare, nxt)  # next epoch computes while we commit
                 _finish(ep, n, prep)
             _finish(*fut.result())
-    else:
-        for ep in epochs:
-            _finish(*_prepare(ep))
 
     wall = time.time() - t0
     out = {
@@ -230,7 +215,6 @@ def main(argv=None):
     p.add_argument("--n-buckets", type=int, default=64)
     p.add_argument("--n-salts", type=int, default=0, help="explicit two-phase salting (0 = rely on algebraic partial agg)")
     p.add_argument("--master", default=None)
-    p.add_argument("--native-sha", action="store_true", help="use JVM sha2 instead of the pandas UDF")
     p.add_argument("--stop-after", type=int, default=None, help="apply at most N epochs (crash/resume testing)")
     p.add_argument("--warmup", action="store_true", help="run a small throwaway replay first (JVM/codegen warmup)")
     p.add_argument("--vacuum-every", type=int, default=None, help="vacuum superseded snapshots every N applied epochs")
@@ -261,7 +245,6 @@ def main(argv=None):
         table_props=props or None,
         n_buckets=a.n_buckets,
         n_salts=a.n_salts,
-        use_pandas_udf=not a.native_sha,
         metrics_dir=a.metrics,
         stop_after=a.stop_after,
         vacuum_every=a.vacuum_every,

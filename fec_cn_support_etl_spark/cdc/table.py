@@ -46,6 +46,7 @@ import math
 import os
 import time
 import uuid
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -342,10 +343,8 @@ def _read_dir_blooms(entry_path: str) -> dict:
         return {}
 
 
-def _one_file_stats(path: str, stat_cols: list[str]) -> dict:
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
+def _one_file_stats(md, stat_cols: list[str]) -> dict:
+    """Footer min/max of ``stat_cols`` from one file's parquet metadata."""
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     out: dict = {}
     for c in stat_cols:
@@ -391,17 +390,44 @@ def _agg_stats(per_file: dict) -> dict:
     return out
 
 
+def _footers(bdir: str) -> dict:
+    """File name -> parquet footer metadata for one bucket directory."""
+    import pyarrow.parquet as pq
+
+    return {
+        name: pq.ParquetFile(os.path.join(bdir, name)).metadata
+        for name in sorted(os.listdir(bdir))
+        if name.endswith(".parquet")
+    }
+
+
 def _file_stats(bdir: str, stat_cols: list[str]) -> dict:
     """Per-FILE footer stats for one bucket directory — recorded by any
     commit whose bucket dir holds more than one file (and always by
     clustered compaction's range slicing), so files inside a resolved
     bucket can be pruned individually (Iceberg per-data-file manifest
     stats)."""
-    out: dict = {}
-    for name in sorted(os.listdir(bdir)):
-        if name.endswith(".parquet"):
-            out[name] = _one_file_stats(os.path.join(bdir, name), stat_cols)
-    return out
+    return {name: _one_file_stats(md, stat_cols) for name, md in _footers(bdir).items()}
+
+
+def _delta_counts(footers) -> tuple[int, int]:
+    """(rows, deletes) of merge-on-read delta files from their footers
+    alone. Delta tombstones are True and live rows NULL in
+    ``DELETED_COL``, so a row group's deletes are its rows minus that
+    column's null count; a row group without that statistic counts zero
+    deletes, never all of its rows."""
+    n_rows = n_del = 0
+    for md in footers:
+        n_rows += md.num_rows
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        if DELETED_COL not in idx:
+            continue
+        for rg in range(md.num_row_groups):
+            rgm = md.row_group(rg)
+            st = rgm.column(idx[DELETED_COL]).statistics
+            if st is not None and st.has_null_count:
+                n_del += rgm.num_rows - st.null_count
+    return n_rows, n_del
 
 
 def _overlaps(stats: dict | None, bounds: dict) -> bool:
@@ -889,10 +915,6 @@ class LakeTable:
         # winner's published files; the loser dir is vacuumed as orphan.
         out_dir = os.path.join(self._data_dir, f"v{version}-{uuid.uuid4().hex[:8]}")
         self._write_parquet(new_bucket_data, snap, out_dir)
-        if callable(lineage):
-            # lazy lineage: resolves Observation metrics collected by
-            # the write job that just finished — zero extra jobs
-            lineage = lineage()
         buckets = {b: files for b, files in snap.buckets.items() if int(b) not in set(touched_buckets)}
         stat_cols = list(dict.fromkeys(self._stat_cols(snap) + list(fstat_cols or [])))
         for b in touched_buckets:
@@ -1078,7 +1100,7 @@ class LakeTable:
         touched_buckets: list[int] | None,
         epoch: str,
         new_schema: T.StructType | None = None,
-        lineage: dict | None = None,
+        lineage: dict | Callable[[list[dict]], dict] | None = None,
         base_snap: Snapshot | None = None,
         max_retries: int = 5,
     ) -> Snapshot:
@@ -1090,6 +1112,14 @@ class LakeTable:
         the base to bound read amplification).
 
         Requires ``order_cols`` on the table (read-time resolution).
+
+        ``lineage`` is the epoch's applied entry: a dict, or a callable
+        that takes one footer row per written bucket dir —
+        ``{BUCKET_COL, "n_rows", "n_deletes", "stats"}`` (``stats`` are
+        the entry's manifest stats, e.g. ``stats["lsn"]["min"]``;
+        deletes as in ``_delta_counts``) — and returns the dict.
+        ``touched_buckets=None`` takes the touched set from the written
+        dir's bucket listing.
 
         Concurrency: appends COMMUTE, so a CommitConflict is rebased
         internally — the already-written delta dir is re-attached to
@@ -1109,20 +1139,8 @@ class LakeTable:
         out_dir = os.path.join(self._data_dir, f"v{snap.version + 1}-{uuid.uuid4().hex[:8]}-delta")
         if delta_rows is not None and (touched_buckets is None or touched_buckets):
             self._write_parquet(delta_rows, snap, out_dir)
-        if callable(lineage):
-            # lazy lineage, resolved after the write with zero extra
-            # jobs.  Two accepted shapes: callable(out_dir=...) derives
-            # stats from the written delta dir's parquet footers
-            # (engine._footer_epoch_stats); a zero-arg callable is the
-            # commit_merge/Observation contract and still works here.
-            import inspect as _inspect
-
-            params = _inspect.signature(lineage).parameters
-            takes_out_dir = "out_dir" in params or any(
-                p.kind is p.VAR_KEYWORD for p in params.values()
-            )
-            lineage = lineage(out_dir=out_dir) if takes_out_dir else lineage()
-        if touched_buckets is None:
+        listed = touched_buckets is None
+        if listed:
             # lazy path: the written delta dirs ARE the touched set —
             # no pre-write stats job ever computed it
             touched_buckets = (
@@ -1134,24 +1152,32 @@ class LakeTable:
                 if os.path.isdir(out_dir)
                 else []
             )
-            lineage = {**(lineage or {}), "touched_buckets": len(touched_buckets)}
         base_schema_id, base_schema_json = snap.current_schema_id, snap.current_schema_json()
         base_layout = (snap.n_buckets, tuple(snap.key_cols), tuple(snap.order_cols))
         # Footer stats + blooms are pure functions of the already-written
         # (immutable) delta dirs — computed ONCE, outside the CAS retry
         # loop, so a rebased attempt never re-reads data pages or
-        # rewrites sidecars.
+        # rewrites sidecars. The same footer pass yields the per-bucket
+        # rows a callable lineage is built from: zero extra jobs.
         dir_stats: dict[int, tuple[dict, dict]] = {}
+        footer_rows = []
         for b in touched_buckets:
             bdir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
             if os.path.isdir(bdir):
-                fst = _file_stats(bdir, self._stat_cols(snap))
+                footers = _footers(bdir)
+                fst = {name: _one_file_stats(md, self._stat_cols(snap)) for name, md in footers.items()}
                 stats = _agg_stats(fst)
+                n_rows, n_del = _delta_counts(footers.values())
+                footer_rows.append({BUCKET_COL: int(b), "n_rows": n_rows, "n_deletes": n_del, "stats": stats})
                 for c, bl in _write_dir_blooms(
                     bdir, self._bloom_cols(snap), self._bloom_bits(snap)
                 ).items():
                     stats.setdefault(c, {})["bloom"] = bl
                 dir_stats[int(b)] = (fst, stats)
+        if callable(lineage):
+            lineage = lineage(footer_rows)
+        if listed:
+            lineage = {**(lineage or {}), "touched_buckets": len(touched_buckets)}
         for _attempt in range(max_retries):
             if snap.is_applied(epoch):
                 # competing writer applied it; our dir is a vacuumable orphan

@@ -25,6 +25,26 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(meminfo: str) -> str:
+    """Driver heap when neither ``driver_memory`` nor
+    SPARK_GRAFT_DRIVER_MEM is given: half of ``MemTotal`` from
+    /proc/meminfo text, in whole GiB, at least 1g. The heap is pinned
+    (-Xms=-Xmx) and pre-touched, so it must fit in physical RAM."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemTotal:"):
+            kib = int(line.split()[1])
+            return f"{max(1, kib // 2 // (1024 * 1024))}g"
+    return "1g"
+
+
+def _meminfo() -> str:
+    try:
+        with open("/proc/meminfo") as fh:
+            return fh.read()
+    except OSError:
+        return ""
+
+
 def get_spark(
     app_name: str = DEFAULT_APP,
     master: str | None = None,
@@ -44,7 +64,7 @@ def get_spark(
         else:
             shuffle_partitions = cores
 
-    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    mem = driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(_meminfo())
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

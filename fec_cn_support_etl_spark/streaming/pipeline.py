@@ -33,7 +33,6 @@ def stream_cdc_ingest(
     checkpoint_dir: str,
     available_now: bool = True,
     n_salts: int = 0,
-    use_pandas_udf: bool = True,
     mode: str = "cow",
     compact_every: int | None = None,
     view=None,
@@ -45,7 +44,11 @@ def stream_cdc_ingest(
     ``mode="mor"`` is the streaming sweet spot: micro-batches are small
     relative to table state, so O(batch) delta appends (vs O(touched
     state) rewrites) keep per-trigger latency flat as the table grows;
-    ``compact_every=N`` folds deltas every N micro-batches.
+    ``compact_every=N`` folds deltas every N micro-batches. Epoch
+    stats take the same path as in the batch runner: MOR reads them
+    from the written delta files' footers (the append is the
+    micro-batch's only job), COW from its grouped stats job. Neither
+    needs a query listener, which never fires inside foreachBatch.
 
     ``max_files_per_trigger`` is the latency/throughput knob: each
     trigger pays a fixed cost (offset commit, checkpoint write, plan
@@ -70,23 +73,7 @@ def stream_cdc_ingest(
     batch_schema = spark.read.parquet(wal_dir).schema
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_epoch(
-            spark,
-            table,
-            batch_df,
-            epoch=f"stream-{batch_id}",
-            n_salts=n_salts,
-            use_pandas_udf=use_pandas_udf,
-            mode=mode,
-            # MOR's lazy stats are parquet-footer reads of the written
-            # delta files — listener-free, so they work inside
-            # foreachBatch and the streaming path pays the same ONE
-            # job per micro-batch as the batch probe. COW's lazy stats
-            # still ride an Observation, whose CollectMetrics listener
-            # never fires inside foreachBatch (the r4 hang) — keep the
-            # eager stats job there.
-            eager_stats=(mode not in ("mor",)),
-        )
+        apply_epoch(spark, table, batch_df, epoch=f"stream-{batch_id}", n_salts=n_salts, mode=mode)
         if compact_every and (batch_id + 1) % compact_every == 0:
             table.compact(max_files=1)
         if view is not None:

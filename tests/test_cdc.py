@@ -200,14 +200,6 @@ def test_delete_then_reinsert(spark, tmp_path):
     assert got.loc[got["path"] == "a.py", "content_sha"].iloc[0] == hashlib.sha256(b"v2").hexdigest()
 
 
-def test_native_sha_matches_pandas_udf(spark, wal, tmp_path):
-    a = str(tmp_path / "a")
-    b = str(tmp_path / "b")
-    runner.replay(spark, wal, a, use_pandas_udf=True)
-    runner.replay(spark, wal, b, use_pandas_udf=False)
-    assert state_digest(table_state(spark, a)) == state_digest(table_state(spark, b))
-
-
 def test_out_of_order_epoch_delivery(spark, wal, tmp_path):
     """Applying epochs in reverse order must converge to the same state:
     the merge is conditional LWW (s.lsn > t.lsn), not blind replace."""
@@ -376,7 +368,7 @@ def test_commit_epoch_retries_on_conflict(spark, wal, tmp_path, monkeypatch):
         return real(self, *a, **kw)
 
     monkeypatch.setattr(LakeTable, "commit_merge", flaky)
-    runner.replay(spark, wal, table_dir, n_buckets=8, stop_after=2, pipelined=False, log=lambda *_: None)
+    runner.replay(spark, wal, table_dir, n_buckets=8, stop_after=2, log=lambda *_: None)
     monkeypatch.setattr(LakeTable, "commit_merge", real)
     assert fails["n"] == 1  # the retry path actually ran
     runner.replay(spark, wal, table_dir, n_buckets=8, log=lambda *_: None)
@@ -401,28 +393,46 @@ def test_metrics_lineage(spark, wal, tmp_path):
     assert all("max_lsn" in v for v in snap.applied.values())
 
 
-def test_bucket_level_lineage_metrics(spark, wal, tmp_path):
-    """Per-partition lineage (north rule): one row per (epoch, bucket)
-    with event LSN ranges + row counts, consistent with the epoch-level
-    rollup, and invisible to reads of the epoch table."""
+def _assert_bucket_lineage(spark, wal, tmp_path, mode):
+    """Per-bucket rows of every epoch: counts sum to the epoch row, LSN
+    ranges lie inside it (and reach its ends), and the bucket ids are
+    exactly the buckets the epoch's keys hash to."""
+    from fec_cn_support_etl_spark.cdc.engine import KEYS
     from fec_cn_support_etl_spark.cdc.metrics import read_bucket_metrics, read_metrics
+    from fec_cn_support_etl_spark.cdc.table import bucket_expr
 
+    n_buckets = 16
     table_dir = str(tmp_path / "lake")
     mdir = str(tmp_path / "metrics")
-    runner.replay(spark, wal, table_dir, n_buckets=16, metrics_dir=mdir)
+    runner.replay(spark, wal, table_dir, n_buckets=n_buckets, metrics_dir=mdir, mode=mode, log=lambda *_: None)
     ep = read_metrics(spark, mdir).toPandas()
     assert len(ep) == EPOCHS  # _buckets subdir hidden from the root read
     bk = read_bucket_metrics(spark, mdir).toPandas()
     assert set(bk["epoch"]) == set(ep["epoch"])
-    agg = bk.groupby("epoch").agg(
-        n_keys=("n_keys", "sum"), n_buckets=("bucket", "nunique"),
-        min_lsn=("min_lsn", "min"), max_lsn=("max_lsn", "max"),
-    )
     for _, row in ep.iterrows():
-        b = agg.loc[row["epoch"]]
-        assert b["n_keys"] == row["n_keys"]
-        assert b["n_buckets"] == row["touched_buckets"]
-        assert b["min_lsn"] == row["min_lsn"] and b["max_lsn"] == row["max_lsn"]
+        b = bk[bk["epoch"] == row["epoch"]]
+        assert b["n_keys"].sum() == row["n_keys"]
+        assert b["n_deletes"].sum() == row["n_deletes"]
+        assert (b["min_lsn"] >= row["min_lsn"]).all() and (b["max_lsn"] <= row["max_lsn"]).all()
+        assert b["min_lsn"].min() == row["min_lsn"] and b["max_lsn"].max() == row["max_lsn"]
+        batch = spark.read.parquet(os.path.join(wal, f"epoch={row['epoch']}"))
+        touched = sorted(r[0] for r in batch.select(bucket_expr(KEYS, n_buckets)).distinct().collect())
+        assert sorted(b["bucket"]) == touched
+        assert row["touched_buckets"] == len(touched)
+
+
+def test_bucket_level_lineage_metrics(spark, wal, tmp_path):
+    """Per-partition lineage (north rule): one row per (epoch, bucket)
+    with event LSN ranges + row counts, consistent with the epoch-level
+    rollup, and invisible to reads of the epoch table. COW takes the
+    rows from the prepare-side stats job."""
+    _assert_bucket_lineage(spark, wal, tmp_path, "cow")
+
+
+def test_bucket_level_lineage_metrics_mor(spark, wal, tmp_path):
+    """The MOR twin: the per-bucket rows come from the footers of each
+    ``__bucket=K`` delta dir, not from a stats job."""
+    _assert_bucket_lineage(spark, wal, tmp_path, "mor")
 
 
 def test_table_cli_metadata_and_maintenance(spark, wal, tmp_path, capsys):

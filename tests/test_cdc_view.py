@@ -153,13 +153,13 @@ def test_view_exact_under_out_of_order_delivery(spark, tmp_path):
 
     # high-lsn images land first
     apply_epoch(spark, t, batch([("r", "a.py", "python", 100), ("r", "b.py", "go", 90)]),
-                epoch="e1", mode="mor", eager_stats=True)
+                epoch="e1", mode="mor")
     v.create()
     # stale batch: lower lsns for the same keys + one genuinely new key.
     # a.py/b.py images LOSE LWW; only c.py changes live state.
     apply_epoch(spark, t, batch([("r", "a.py", "rust", 10), ("r", "b.py", "rust", 9),
                                  ("r", "c.py", "rust", 8)]),
-                epoch="e0-late", mode="mor", eager_stats=True)
+                epoch="e0-late", mode="mor")
     v.refresh()
     got = sorted(tuple(r) for r in v.read().collect())
     want = sorted(

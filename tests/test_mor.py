@@ -479,38 +479,49 @@ def test_mor_auto_compact_bounds_snapshot_growth(spark, wal, tmp_path):
 
 
 def test_mor_lazy_epoch_folds_stats_into_write_job(spark, wal, tmp_path):
-    """The small-epoch throughput contract: with metrics off, a MOR
-    epoch runs ONLY the delta-append write (AQE may split it into
-    stage-jobs, so we pin the shape, not a magic count): stats ride
-    the write as Observation metrics and touched buckets come from the
-    written dirs. Applying the SAME batch with eager_stats must cost
-    strictly more jobs (the dedicated stats/persist job) — that extra
-    job per epoch is what capped the probe below 80k ev/s."""
+    """The small-epoch throughput contract: a MOR epoch's stats ride
+    its delta-append write. ``prepare_epoch`` runs NO Spark job, and
+    the append is the epoch's only one (AQE may split it into
+    stage-jobs, so the test pins the shape, not a magic count): a COW
+    apply of the same batch, which needs its grouped stats job before
+    the merge, costs strictly more jobs. The footer stats equal a
+    pandas LWW count of the batch."""
+    import pandas as pd
+
     from fec_cn_support_etl_spark.cdc import engine
 
     a, b = str(tmp_path / "a"), str(tmp_path / "b")
     _replay(spark, wal, a, mode="mor", stop_after=1)
-    _replay(spark, wal, b, mode="mor", stop_after=1)
-    batch = spark.read.parquet(os.path.join(wal, "epoch=1"))
+    _replay(spark, wal, b, mode="cow", stop_after=1)
+    epoch_dir = os.path.join(wal, "epoch=1")
+    batch = spark.read.parquet(epoch_dir)
     batch.count()  # warm the scan so both probes count only the apply
     tracker = spark.sparkContext.statusTracker()
 
-    def jobs_for(table_dir, eager):
-        t = LakeTable(spark, table_dir)
-        before = set(tracker.getJobIdsForGroup())
-        prep = engine.prepare_epoch(spark, t, batch, "1", eager_stats=eager, mode="mor")
-        res = engine.commit_epoch(spark, t, prep, mode="mor")
-        assert not res.skipped and res.n_keys > 0
-        assert res.touched_buckets > 0
-        assert res.min_lsn is not None and res.max_lsn is not None
-        return res, len(set(tracker.getJobIdsForGroup()) - before)
+    def jobs():
+        return set(tracker.getJobIdsForGroup())
 
-    lazy_res, lazy_jobs = jobs_for(a, eager=False)
-    eager_res, eager_jobs = jobs_for(b, eager=True)
-    assert lazy_jobs < eager_jobs, f"lazy {lazy_jobs} jobs vs eager {eager_jobs}"
-    # and the observed stats equal the eagerly-computed ones exactly
+    before = jobs()
+    t = LakeTable(spark, a)
+    prep = engine.prepare_epoch(spark, t, batch, "1", mode="mor")
+    assert jobs() == before, "MOR prepare ran a Spark job"
+    with pytest.raises(ValueError, match="must commit as mor"):
+        engine.commit_epoch(spark, t, prep, mode="cow")  # no touched list to merge by
+    mor = engine.commit_epoch(spark, t, prep, mode="mor")
+    mor_jobs = len(jobs() - before)
+    before = jobs()
+    cow = engine.apply_epoch(spark, LakeTable(spark, b), batch, "1", mode="cow")
+    cow_jobs = len(jobs() - before)
+    assert mor_jobs < cow_jobs, f"mor {mor_jobs} jobs vs cow {cow_jobs}"
+
+    events = pd.read_parquet(epoch_dir).sort_values(["lsn", "commit"])
+    winners = events.groupby(["repo", "path"]).last()
+    assert mor.n_keys == len(winners)
+    assert mor.n_deletes == int((winners["op"] == "D").sum())
+    assert (mor.min_lsn, mor.max_lsn) == (winners["lsn"].min(), winners["lsn"].max())
+    assert mor.touched_buckets > 0
     for f in ("n_keys", "n_deletes", "min_lsn", "max_lsn", "touched_buckets"):
-        assert getattr(lazy_res, f) == getattr(eager_res, f), f
+        assert getattr(mor, f) == getattr(cow, f), f
 
 
 def test_footer_stats_missing_statistics_degrade_to_zero_deletes(tmp_path):
@@ -520,7 +531,8 @@ def test_footer_stats_missing_statistics_degrade_to_zero_deletes(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from fec_cn_support_etl_spark.cdc.engine import _footer_epoch_stats
+    from fec_cn_support_etl_spark.cdc.engine import _footer_stats_row
+    from fec_cn_support_etl_spark.cdc.table import _agg_stats, _delta_counts, _file_stats, _footers
 
     tbl = pa.table(
         {
@@ -536,20 +548,24 @@ def test_footer_stats_missing_statistics_degrade_to_zero_deletes(tmp_path):
     pq.write_table(
         tbl, os.path.join(d_none, "part-0.parquet"), write_statistics=False
     )
-    st = _footer_epoch_stats(d_stats)
-    assert st == {
-        "n_events": 4, "n_keys": 4, "n_deletes": 2, "min_lsn": 10, "max_lsn": 13,
-    }
-    st2 = _footer_epoch_stats(d_none)
-    assert st2["n_events"] == 4
+
+    def bucket_row(d):
+        n_rows, n_deletes = _delta_counts(_footers(d).values())
+        stats = _agg_stats(_file_stats(d, ["lsn"]))
+        return _footer_stats_row({"__bucket": 3, "n_rows": n_rows, "n_deletes": n_deletes, "stats": stats})
+
+    assert bucket_row(d_stats) == {"__bucket": 3, "n_keys": 4, "n_deletes": 2, "min_lsn": 10, "max_lsn": 13}
+    st2 = bucket_row(d_none)
+    assert st2["n_keys"] == 4
     assert st2["n_deletes"] == 0, "missing stats must not count as all-deletes"
     assert st2["min_lsn"] is None and st2["max_lsn"] is None
 
 
-def test_append_delta_accepts_zero_arg_lineage_callable(spark, tmp_path):
-    """commit_append_delta must honor BOTH lazy-lineage contracts: the
-    footer-stats shape callable(out_dir=...) and the zero-arg
-    Observation shape commit_merge documents."""
+def test_append_delta_lineage_dict_or_footer_callable(spark, tmp_path):
+    """commit_append_delta takes its lineage as a dict or as a callable
+    of the per-bucket footer rows of the files it just wrote; with
+    ``touched_buckets=None`` it records the touched count from the
+    written dir's bucket listing."""
     from pyspark.sql import types as T
 
     from fec_cn_support_etl_spark.cdc.table import BUCKET_COL, bucket_expr
@@ -574,20 +590,24 @@ def test_append_delta_accepts_zero_arg_lineage_callable(spark, tmp_path):
         spark.createDataFrame([(1, "a2", 2)], schema)
         .withColumn(BUCKET_COL, bucket_expr(["id"], 2))
     )
-    snap = t.commit_append_delta(
-        delta, None, epoch="1", lineage=lambda: {"mode": "observation"}
-    )
-    assert snap.applied["1"]["mode"] == "observation"
-    assert snap.applied["1"]["touched_buckets"] >= 1
+    snap = t.commit_append_delta(delta, None, epoch="1", lineage={"mode": "dict"})
+    assert snap.applied["1"]["mode"] == "dict"
+    assert snap.applied["1"]["touched_buckets"] == 1
     delta2 = (
         spark.createDataFrame([(2, "b2", 3)], schema)
         .withColumn(BUCKET_COL, bucket_expr(["id"], 2))
     )
+    seen = []
     snap2 = t.commit_append_delta(
         delta2, None, epoch="2",
-        lineage=lambda out_dir: {"saw_dir": out_dir is not None},
+        lineage=lambda rows: seen.extend(rows) or {"n_rows": sum(r["n_rows"] for r in rows)},
     )
-    assert snap2.applied["2"]["saw_dir"] is True
+    (row,) = seen
+    (b2,) = [r[0] for r in delta2.select(BUCKET_COL).collect()]
+    assert row[BUCKET_COL] == b2 and row["n_rows"] == 1 and row["n_deletes"] == 0
+    assert row["stats"]["lsn"]["min"] == row["stats"]["lsn"]["max"] == 3
+    assert snap2.applied["2"]["n_rows"] == 1
+    assert snap2.applied["2"]["touched_buckets"] == 1
 
 
 def test_state_codec_default_and_override(spark, tmp_path):
