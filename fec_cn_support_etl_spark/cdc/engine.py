@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from ..functions.udfs import lang_normalize_udf, sha256_udf
 from .schema_evolution import reconcile
-from .table import BUCKET_COL, LakeTable, bucket_expr
+from .table import BUCKET_COL, LakeTable, bucket_expr, resolve_lww
 
 KEYS = ["repo", "path"]
 ORDER_COLS = ["lsn", "commit"]  # total order => bit-stable replay
@@ -87,10 +87,10 @@ def lww_dedup(
     Reference analog: the prefer-principal / keep-first dedup
     (scripts/merge_support.py:150-180) generalized to a total LSN order.
     """
+    if n_salts <= 1:
+        return resolve_lww(batch, KEYS, ORDER_COLS)
     ord_struct = F.struct(*[F.col(c) for c in ORDER_COLS])
     row_struct = F.struct(*[F.col(c) for c in batch.columns])
-    if n_salts <= 1:
-        return batch.groupBy(*KEYS).agg(F.max_by(row_struct, ord_struct).alias("r")).select("r.*")
     if hot_keys is None:
         salted = batch.withColumn("__salt", F.pmod(F.xxhash64("lsn"), F.lit(n_salts)).cast("int"))
     else:
@@ -406,16 +406,9 @@ def _merge_and_commit(spark, table, snap, winners, stats, touched, epoch):
     # with the batch row and highest (lsn, commit) wins. Deletes become
     # tombstone rows, so an out-of-order older upsert cannot resurrect
     # a deleted key; read() hides tombstones.
-    ord_struct = F.struct(*[F.col(c) for c in ORDER_COLS])
-    row_cols = [f.name for f in target_schema.fields]
-    new_state = (
-        _conform(state, target_schema)
-        .unionByName(batch_rows)
-        .groupBy(*KEYS)
-        .agg(F.max_by(F.struct(*row_cols), ord_struct).alias("r"))
-        .select("r.*")
-        .withColumn(BUCKET_COL, bucket_expr(KEYS, snap.n_buckets))
-    )
+    new_state = resolve_lww(
+        _conform(state, target_schema).unionByName(batch_rows), KEYS, ORDER_COLS
+    ).withColumn(BUCKET_COL, bucket_expr(KEYS, snap.n_buckets))
     # Bucket-aligned repartition: exactly one file per bucket AND full
     # write parallelism (without it AQE coalesces the small agg output
     # to ~2 x 64MB partitions and the parquet write serializes).

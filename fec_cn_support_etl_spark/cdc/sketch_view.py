@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 from ..operators.heavyhitters import SHARD_COL as HH_SHARD_COL
 from ..operators.qsketch import DEFAULT_K, QuantileSketch
 from .table import LakeTable
-from .view import MarkerStateView, ViewStale
+from .view import MarkerStateView
 
 
 class SketchView(MarkerStateView):
@@ -164,26 +164,16 @@ class SketchView(MarkerStateView):
         """Fold every upsert image committed since the last sync.
         Deletes are ignored (sketches do not retract — insert-only image
         -stream semantics, see module docstring)."""
-        st = self._state()
-        from_v = int(st["synced_version"])
-        snap = self.main.current_snapshot()
-        to_v = snap.version
-        if to_v == from_v:
-            return {"from": from_v, "to": to_v, "noop": True}
-        try:
-            changes = self.main.read_changes(from_v, to_v)
-        except FileNotFoundError as exc:
-            raise ViewStale(
-                f"change-feed range v{from_v}..v{to_v} is no longer fully retained; "
-                "rebuild with create()"
-            ) from exc
+        from_snap, snap, changes = self._pending_changes()
+        if changes is None:
+            return {"from": snap.version, "to": snap.version, "noop": True}
         images = changes.filter(F.col("_change_type") == "upsert").drop(
             "_change_type", "_commit_version"
         )
         delta = self._sketch(images)
         merged = self._merge(self.read().unionByName(delta, allowMissingColumns=True))
-        self._publish(merged, to_v)
-        return {"from": from_v, "to": to_v, "noop": False}
+        self._publish(merged, snap.version)
+        return {"from": from_snap.version, "to": snap.version, "noop": False}
 
     # --------------------------------------------------------- estimates
     def estimates(self, quantiles: list[float] | None = None) -> DataFrame:
@@ -311,19 +301,9 @@ class HeavyHittersView(MarkerStateView):
     def refresh(self) -> dict:
         from ..operators.heavyhitters import hh_merge, hh_truncate
 
-        st = self._state()
-        from_v = int(st["synced_version"])
-        snap = self.main.current_snapshot()
-        to_v = snap.version
-        if to_v == from_v:
-            return {"from": from_v, "to": to_v, "noop": True}
-        try:
-            changes = self.main.read_changes(from_v, to_v)
-        except FileNotFoundError as exc:
-            raise ViewStale(
-                f"change-feed range v{from_v}..v{to_v} is no longer fully retained; "
-                "rebuild with create()"
-            ) from exc
+        from_snap, snap, changes = self._pending_changes()
+        if changes is None:
+            return {"from": snap.version, "to": snap.version, "noop": True}
         images = changes.filter(F.col("_change_type") == "upsert").drop(
             "_change_type", "_commit_version"
         )
@@ -333,8 +313,8 @@ class HeavyHittersView(MarkerStateView):
         # with it the view is O(n_shards * keep) per group FOREVER, and
         # the dropped counts fold into the tail bound soundly.
         merged = hh_truncate(*merged, self.group_cols, self.keep)
-        self._publish(self._pack(*merged), to_v)
-        return {"from": from_v, "to": to_v, "noop": False}
+        self._publish(self._pack(*merged), snap.version)
+        return {"from": from_snap.version, "to": snap.version, "noop": False}
 
     # --------------------------------------------------------- estimates
     def heavy_hitters(self, threshold: int) -> DataFrame:

@@ -4,14 +4,15 @@ Why it exists: the north rule targets Iceberg MERGE INTO, but the
 Iceberg Spark runtime jar cannot be fetched in this sandbox (no
 network). LakeTable reproduces the semantics the engine needs —
 snapshot isolation, atomic commits, bucket-level copy-on-write,
-schema evolution, and an embedded idempotent commit manifest — on
-plain parquet + JSON, in ~200 lines, so the CDC engine above it is
-lake-format-agnostic (see engine.iceberg_merge_sql for the real-
+merge-on-read deltas, schema evolution, and an embedded idempotent
+commit manifest — on plain parquet + JSON, so the CDC engine above it
+is lake-format-agnostic (see engine.iceberg_merge_sql for the real-
 Iceberg path).
 
 Layout:
     root/
-      snapshots/v{N}.json   -- atomic rename commit; the table IS the
+      snapshots/v{N}.json   -- compare-and-swap commit (``os.link``
+                               fails if v{N} exists); the table IS the
                                latest v{N}. Contains: schema (per
                                schema_id), bucket -> [data files],
                                applied epoch manifest, lineage refs.
@@ -32,7 +33,12 @@ With B buckets and a batch touching k keys, write amplification is
 O(k/B * table) instead of O(table) — the same economics as Iceberg
 COW with a bucket partition spec.
 
-Crash safety: data files land first, the snapshot JSON is renamed into
+One scan path: every read lists its files per schema id and hands them
+to ``_scan``. One successor path: every commit derives snapshot N+1
+from its base with ``dataclasses.replace`` and publishes it through
+``_write_snapshot``.
+
+Crash safety: data files land first, the snapshot JSON is linked into
 place last (atomic on POSIX). A crash in between leaves orphan files
 that a replayed epoch simply ignores (manifest check), matching
 Iceberg's commit protocol.
@@ -47,7 +53,7 @@ import os
 import time
 import uuid
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -106,6 +112,23 @@ class Snapshot:
         # never compare numerically against it (it was never collapsed)
         wm = self.props.get("epoch_watermark")
         return wm is not None and e.isdigit() and int(e) <= int(wm)
+
+
+def _next_schema(snap: Snapshot, new_schema: T.StructType | None) -> tuple[dict, str]:
+    """(schema_json, current_schema_id) for a data commit on ``snap``: a
+    ``new_schema`` that differs from the current one is registered under
+    the next ``s{N}`` id; old ids stay, so older files keep their schema."""
+    schema_json, schema_id = dict(snap.schema_json), snap.current_schema_id
+    if new_schema is not None and new_schema.json() != schema_json[schema_id]:
+        schema_id = f"s{len(schema_json)}"
+        schema_json[schema_id] = new_schema.json()
+    return schema_json, schema_id
+
+
+def _record_epoch(snap: Snapshot, epoch: str, lineage: dict | None = None) -> dict:
+    """``snap``'s applied manifest plus ``epoch``, committed as v{N+1}."""
+    entry = {"snapshot": snap.version + 1, "ts": time.time(), **(lineage or {})}
+    return {**snap.applied, str(epoch): entry}
 
 
 def _json_safe(v, widen: str | None = None):
@@ -401,13 +424,13 @@ def _footers(bdir: str) -> dict:
     }
 
 
-def _file_stats(bdir: str, stat_cols: list[str]) -> dict:
-    """Per-FILE footer stats for one bucket directory — recorded by any
-    commit whose bucket dir holds more than one file (and always by
-    clustered compaction's range slicing), so files inside a resolved
-    bucket can be pruned individually (Iceberg per-data-file manifest
-    stats)."""
-    return {name: _one_file_stats(md, stat_cols) for name, md in _footers(bdir).items()}
+def _file_stats(footers: dict, stat_cols: list[str]) -> dict:
+    """Per-FILE footer stats of one bucket directory's ``_footers`` —
+    recorded by any commit whose bucket dir holds more than one file
+    (and always by clustered compaction's range slicing), so files
+    inside a resolved bucket can be pruned individually (Iceberg
+    per-data-file manifest stats)."""
+    return {name: _one_file_stats(md, stat_cols) for name, md in footers.items()}
 
 
 def _delta_counts(footers) -> tuple[int, int]:
@@ -738,39 +761,41 @@ class LakeTable:
         }
         if wm < 0 or applied == snap.applied:
             return snap
-        new_snap = Snapshot(
-            version=snap.version + 1,
-            schema_json=dict(snap.schema_json),
-            current_schema_id=snap.current_schema_id,
-            buckets=snap.buckets,
-            applied=applied,
-            key_cols=snap.key_cols,
-            n_buckets=snap.n_buckets,
-            props={**snap.props, "epoch_watermark": wm},
-            order_cols=snap.order_cols,
+        new_snap = replace(
+            snap, version=snap.version + 1, applied=applied, props={**snap.props, "epoch_watermark": wm}
         )
         self._write_snapshot(new_snap)
         return new_snap
 
     # -------------------------------------------------------------- read
+    def _scan(self, snap: Snapshot, by_schema: dict[str, list[str]]) -> DataFrame:
+        """The one file scan under every read: each schema id's files
+        are read with the schema they were written with (no inference),
+        cast up to ``snap``'s current schema, and unioned — schema
+        evolution on read, the reference's _safe_read_csv generalized
+        (scripts/merge_support.py:17-36). No files: an empty frame of
+        the current schema, so callers see the same columns either way."""
+        cur_schema = self.schema(snap)
+        out = None
+        for sid, paths in sorted(by_schema.items()):
+            s = T.StructType.fromJson(json.loads(snap.schema_json[sid]))
+            df = _conform(self.spark.read.schema(s).parquet(*paths), cur_schema)
+            out = df if out is None else out.unionByName(df)
+        return self.spark.createDataFrame([], cur_schema) if out is None else out
+
     def read(
         self,
         snap: Snapshot | None = None,
         buckets: list[int] | None = None,
         include_deleted: bool = False,
     ) -> DataFrame:
-        """Current table state. Files are grouped by the schema they were
-        written with, read with that exact schema (no inference), cast
-        up to the current schema, and unioned — schema evolution on
-        read, the reference's _safe_read_csv generalized
-        (scripts/merge_support.py:17-36).
+        """Current table state (see ``_scan`` for schema evolution).
 
         Deletes are stored as tombstone rows (``_deleted`` true) so that
         out-of-order batches can still lose LWW against a delete; normal
         reads filter them out and hide the column. ``include_deleted``
         exposes them (the merge path needs them)."""
         snap = snap or self.current_snapshot()
-        cur_schema = self.schema(snap)
         wanted = {str(b) for b in buckets} if buckets is not None else None
         # merge-on-read split: only buckets holding delta files (>1
         # entry) pay the read-time LWW shuffle; clean single-file
@@ -784,28 +809,14 @@ class LakeTable:
             target = dirty if (len(files) > 1 and snap.order_cols) else clean
             for f in files:
                 target.setdefault(f["schema_id"], []).append(f["path"])
-        if not clean and not dirty:
-            return self.spark.createDataFrame([], cur_schema)
-
-        def _union(by_schema):
-            parts = []
-            for sid, paths in sorted(by_schema.items()):
-                s = T.StructType.fromJson(json.loads(snap.schema_json[sid]))
-                df = self.spark.read.schema(s).parquet(*paths)
-                parts.append(_conform(df, cur_schema))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
         out = None
         if dirty:
             # base + appended deltas may carry several images of a key;
             # resolve LWW BEFORE tombstone hiding so a delete delta
             # suppresses an older base upsert
-            out = resolve_lww(_union(dirty), snap.key_cols, snap.order_cols)
-        if clean:
-            cdf = _union(clean)
+            out = resolve_lww(self._scan(snap, dirty), snap.key_cols, snap.order_cols)
+        if clean or out is None:
+            cdf = self._scan(snap, clean)
             out = cdf if out is None else out.unionByName(cdf)
         if not include_deleted and DELETED_COL in out.columns:
             out = out.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
@@ -833,8 +844,7 @@ class LakeTable:
         probing an int key with a string literal must not silently miss
         its bucket."""
         snap = snap or self.current_snapshot()
-        cur_schema = self.schema(snap)
-        key_fields = [cur_schema[c] for c in snap.key_cols]
+        key_fields = [self.schema(snap)[c] for c in snap.key_cols]
         if isinstance(keys, DataFrame):
             kdf = keys
         else:
@@ -853,9 +863,6 @@ class LakeTable:
                 bucket_expr(snap.key_cols, snap.n_buckets).alias("b")
             ).distinct().collect()
         ]
-        if not wanted:
-            base = self.spark.createDataFrame([], cur_schema)
-            return base if include_deleted or DELETED_COL not in base.columns else base.drop(DELETED_COL)
         base = self.read(snap=snap, buckets=wanted, include_deleted=include_deleted)
         return base.join(F.broadcast(kdf), on=snap.key_cols, how="left_semi")
 
@@ -882,10 +889,11 @@ class LakeTable:
         new data was computed from a read of the table (optimistic
         concurrency, Iceberg-style). Defaults to the current snapshot
         (safe only for state-independent writes)."""
-        snap, version, schema_json, schema_id, buckets, applied = self._build_merge(
+        _, new_snap = self._build_merge(
             new_bucket_data, touched_buckets, epoch, new_schema, lineage, base_snap, fstat_cols
         )
-        return self._publish(snap, version, schema_json, schema_id, buckets, applied)
+        self._write_snapshot(new_snap)
+        return new_snap
 
     def _build_merge(
         self,
@@ -898,16 +906,13 @@ class LakeTable:
         fstat_cols: list[str] | None = None,
     ):
         """Everything commit_merge does EXCEPT the publish: write the
-        touched buckets' data and assemble the would-be snapshot parts.
-        Shared by the atomic publish path (commit_merge) and the staged
-        write-audit-publish path (stage_merge)."""
+        touched buckets' data and derive the would-be snapshot. Returns
+        ``(base_snap, new_snap)``. Shared by the atomic publish path
+        (commit_merge) and the staged write-audit-publish path
+        (stage_merge)."""
         snap = base_snap or self.current_snapshot()
         version = snap.version + 1
-        schema_json = dict(snap.schema_json)
-        schema_id = snap.current_schema_id
-        if new_schema is not None and new_schema.json() != schema_json[schema_id]:
-            schema_id = f"s{len(schema_json)}"
-            schema_json[schema_id] = new_schema.json()
+        schema_json, schema_id = _next_schema(snap, new_schema)
 
         # Unique attempt dir (Iceberg-style unique data-file names): a
         # racing writer deriving the same target version writes its OWN
@@ -924,28 +929,37 @@ class LakeTable:
                 # the bucket's full final state — one image per key, so
                 # files inside the entry hold disjoint key sets and may be
                 # pruned individually by zone-map reads (read_where).
-                # Per-file stats ride every multi-file commit (the footers
-                # are already being parsed for the entry-level stats);
-                # for a single-file dir they'd duplicate the entry stats.
-                fst = _file_stats(bdir, stat_cols)
-                stats = _agg_stats(fst)
-                for c, bl in _write_dir_blooms(
-                    bdir, self._bloom_cols(snap), self._bloom_bits(snap)
-                ).items():
-                    stats.setdefault(c, {})["bloom"] = bl
-                entry = {
-                    "path": bdir,
-                    "schema_id": schema_id,
-                    "stats": stats,
-                    "resolved": True,
-                }
-                if len(fst) > 1:
-                    entry["fstats"] = fst
-                buckets[str(b)] = [entry]
+                buckets[str(b)] = [self._dir_entry(snap, bdir, schema_id, stat_cols, resolved=True)[0]]
             # empty bucket (all rows deleted) -> no files, bucket absent
-        applied = dict(snap.applied)
-        applied[str(epoch)] = {"snapshot": version, "ts": time.time(), **(lineage or {})}
-        return snap, version, schema_json, schema_id, buckets, applied
+        return snap, replace(
+            snap,
+            version=version,
+            schema_json=schema_json,
+            current_schema_id=schema_id,
+            buckets=buckets,
+            applied=_record_epoch(snap, epoch, lineage),
+        )
+
+    def _dir_entry(
+        self, snap: Snapshot, bdir: str, schema_id: str, stat_cols: list[str], resolved: bool = False
+    ) -> tuple[dict, dict]:
+        """Manifest entry for one freshly written bucket dir, plus the
+        footers it was built from: footer min/max per file and folded,
+        the dir's bloom sidecar folded into the entry stats, and
+        per-file stats (``fstats``) when the dir holds more than one
+        file — the footers are already parsed for the entry stats; for
+        a single-file dir they would duplicate them."""
+        footers = _footers(bdir)
+        fst = _file_stats(footers, stat_cols)
+        stats = _agg_stats(fst)
+        for c, bl in _write_dir_blooms(bdir, self._bloom_cols(snap), self._bloom_bits(snap)).items():
+            stats.setdefault(c, {})["bloom"] = bl
+        entry = {"path": bdir, "schema_id": schema_id, "stats": stats}
+        if resolved:
+            entry["resolved"] = True
+        if len(fst) > 1:
+            entry["fstats"] = fst
+        return entry, footers
 
     # ------------------------------------------------ write-audit-publish
     @property
@@ -973,25 +987,12 @@ class LakeTable:
         table layer).  Step 3: ``publish_staged`` (atomic CAS) or
         ``discard_staged`` (data dir becomes a vacuumable orphan).
         Returns the staged name."""
-        snap, version, schema_json, schema_id, buckets, applied = self._build_merge(
+        snap, new_snap = self._build_merge(
             new_bucket_data, touched_buckets, epoch, new_schema, lineage, base_snap, fstat_cols
         )
         name = name or f"wap-{epoch}"
         os.makedirs(self._staged_dir, exist_ok=True)
-        doc = {
-            "base_version": snap.version,
-            "snapshot": {
-                "version": version,
-                "schema_json": schema_json,
-                "current_schema_id": schema_id,
-                "buckets": buckets,
-                "applied": applied,
-                "key_cols": snap.key_cols,
-                "n_buckets": snap.n_buckets,
-                "props": snap.props,
-                "order_cols": snap.order_cols,
-            },
-        }
+        doc = {"base_version": snap.version, "snapshot": new_snap.__dict__}
         tmp = os.path.join(self._staged_dir, f".{name}.json.tmp.{os.getpid()}")
         final = os.path.join(self._staged_dir, f"{name}.json")
         with open(tmp, "w") as fh:
@@ -1061,38 +1062,13 @@ class LakeTable:
             merged = {k: v for k, v in merged.items() if v is not None}
             if merged == (snap.props or {}):
                 return snap
-            new_snap = Snapshot(
-                version=snap.version + 1,
-                schema_json=snap.schema_json,
-                current_schema_id=snap.current_schema_id,
-                buckets=snap.buckets,
-                applied=snap.applied,
-                key_cols=snap.key_cols,
-                n_buckets=snap.n_buckets,
-                props=merged,
-                order_cols=snap.order_cols,
-            )
+            new_snap = replace(snap, version=snap.version + 1, props=merged)
             try:
                 self._write_snapshot(new_snap)
                 return new_snap
             except CommitConflict:
                 continue  # rebase on the fresh snapshot and retry
         raise CommitConflict(f"props update lost {max_retries} races")
-
-    def _publish(self, snap, version, schema_json, schema_id, buckets, applied) -> Snapshot:
-        new_snap = Snapshot(
-            version=version,
-            schema_json=schema_json,
-            current_schema_id=schema_id,
-            buckets=buckets,
-            applied=applied,
-            key_cols=snap.key_cols,
-            n_buckets=snap.n_buckets,
-            props=snap.props,
-            order_cols=snap.order_cols,
-        )
-        self._write_snapshot(new_snap)
-        return new_snap
 
     def commit_append_delta(
         self,
@@ -1158,22 +1134,21 @@ class LakeTable:
         # (immutable) delta dirs — computed ONCE, outside the CAS retry
         # loop, so a rebased attempt never re-reads data pages or
         # rewrites sidecars. The same footer pass yields the per-bucket
-        # rows a callable lineage is built from: zero extra jobs.
-        dir_stats: dict[int, tuple[dict, dict]] = {}
+        # rows a callable lineage is built from: zero extra jobs. Delta
+        # entries are NOT resolved (final-state reads must take the whole
+        # bucket — stale-image trap), but RAW reads (read_images_where)
+        # prune per file, so multi-file delta dirs record per-file stats
+        # too. Their schema id is set per attempt, against the rebased
+        # snapshot.
+        entries: list[tuple[str, dict]] = []
         footer_rows = []
         for b in touched_buckets:
             bdir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
             if os.path.isdir(bdir):
-                footers = _footers(bdir)
-                fst = {name: _one_file_stats(md, self._stat_cols(snap)) for name, md in footers.items()}
-                stats = _agg_stats(fst)
+                e, footers = self._dir_entry(snap, bdir, base_schema_id, self._stat_cols(snap))
                 n_rows, n_del = _delta_counts(footers.values())
-                footer_rows.append({BUCKET_COL: int(b), "n_rows": n_rows, "n_deletes": n_del, "stats": stats})
-                for c, bl in _write_dir_blooms(
-                    bdir, self._bloom_cols(snap), self._bloom_bits(snap)
-                ).items():
-                    stats.setdefault(c, {})["bloom"] = bl
-                dir_stats[int(b)] = (fst, stats)
+                footer_rows.append({BUCKET_COL: int(b), "n_rows": n_rows, "n_deletes": n_del, "stats": e["stats"]})
+                entries.append((str(b), e))
         if callable(lineage):
             lineage = lineage(footer_rows)
         if listed:
@@ -1192,33 +1167,20 @@ class LakeTable:
                     f"now ({snap.n_buckets}, {tuple(snap.key_cols)}, {tuple(snap.order_cols)})) — "
                     "delta placement must be re-derived"
                 )
-            version = snap.version + 1
-            schema_json = dict(snap.schema_json)
-            schema_id = snap.current_schema_id
-            if new_schema is not None and new_schema.json() != schema_json[schema_id]:
-                schema_id = f"s{len(schema_json)}"
-                schema_json[schema_id] = new_schema.json()
+            schema_json, schema_id = _next_schema(snap, new_schema)
             buckets = {b: list(files) for b, files in snap.buckets.items()}
-            for b in touched_buckets:
-                if int(b) in dir_stats:
-                    # delta entries are NOT resolved (final-state reads
-                    # must take the whole bucket — stale-image trap), but
-                    # RAW reads (read_images_where / read_since_lsn
-                    # planning) prune per file, so multi-file delta dirs
-                    # record per-file stats too
-                    fst, stats = dir_stats[int(b)]
-                    e = {
-                        "path": os.path.join(out_dir, f"{BUCKET_COL}={b}"),
-                        "schema_id": schema_id,
-                        "stats": stats,
-                    }
-                    if len(fst) > 1:
-                        e["fstats"] = fst
-                    buckets.setdefault(str(b), []).append(e)
-            applied = dict(snap.applied)
-            applied[str(epoch)] = {"snapshot": version, "ts": time.time(), **(lineage or {})}
+            for b, e in entries:
+                buckets.setdefault(b, []).append(dict(e, schema_id=schema_id))
+            new_snap = replace(
+                snap,
+                version=snap.version + 1,
+                schema_json=schema_json,
+                current_schema_id=schema_id,
+                buckets=buckets,
+                applied=_record_epoch(snap, epoch, lineage),
+            )
             try:
-                new_snap = self._publish(snap, version, schema_json, schema_id, buckets, applied)
+                self._write_snapshot(new_snap)
             except CommitConflict:
                 snap = self.current_snapshot()  # rebase: appends commute
                 continue
@@ -1325,39 +1287,6 @@ class LakeTable:
             fstat_cols=cluster_cols or None,
         )
 
-    def read_since_lsn(self, min_lsn: int, snap: Snapshot | None = None) -> DataFrame:
-        """All row images with lsn >= ``min_lsn`` — file-pruned via the
-        manifest stats BEFORE any Spark job: a file whose footer
-        max(lsn) < min_lsn is never listed in the scan. This is the
-        Iceberg-manifest-stats read path (incremental audits, re-index
-        jobs, late-consumer catch-up); rows are RAW images (not
-        LWW-resolved — a consumer wanting final state uses read()).
-        Files from pre-stats snapshots (no recorded stats) are kept —
-        pruning is only ever an optimization, never a correctness
-        gamble."""
-        snap = snap or self.current_snapshot()
-        cur_schema = self.schema(snap)
-        by_schema: dict[str, list[str]] = {}
-        kept = skipped = 0
-        for files in snap.buckets.values():
-            for f in files:
-                st = (f.get("stats") or {}).get("lsn")
-                if st is not None and st.get("max") is not None and st["max"] < min_lsn:
-                    skipped += 1
-                    continue
-                kept += 1
-                by_schema.setdefault(f["schema_id"], []).append(f["path"])
-        if not by_schema:
-            return self.spark.createDataFrame([], cur_schema).filter(F.lit(False))
-        parts = []
-        for sid, paths in sorted(by_schema.items()):
-            sch = T.StructType.fromJson(json.loads(snap.schema_json[sid]))
-            parts.append(_conform(self.spark.read.schema(sch).parquet(*paths), cur_schema))
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_)
-        return out.filter(F.col("lsn") >= min_lsn)
-
     # ------------------------------------------------- zone-map pruned reads
     def _plan_pruned_scan(self, bounds: dict, snap: Snapshot, eq: dict | None = None):
         """Driver-side zone-map + bloom planning for a FINAL-STATE read
@@ -1463,26 +1392,11 @@ class LakeTable:
         satisfy the predicates."""
         bounds = dict(bounds or {})
         snap = snap or self.current_snapshot()
-        cur_schema = self.schema(snap)
         clean, dirty, _, _ = self._plan_pruned_scan(bounds, snap, eq)
-        parts = []
-        if clean:
-            for sid, paths in sorted(clean.items()):
-                s = T.StructType.fromJson(json.loads(snap.schema_json[sid]))
-                parts.append(_conform(self.spark.read.schema(s).parquet(*paths), cur_schema))
+        out = self._scan(snap, clean) if clean or not dirty else None
         if dirty:
-            parts.append(self.read(snap, buckets=dirty, include_deleted=True))
-        if not parts:
-            # Schema must match the non-empty branch (and read().filter(...)):
-            # drop the internal tombstone column unless the caller asked for it
-            # — mirrors read_keys' empty path.
-            empty = self.spark.createDataFrame([], cur_schema).filter(F.lit(False))
-            if not include_deleted and DELETED_COL in empty.columns:
-                empty = empty.drop(DELETED_COL)
-            return empty
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
+            ddf = self.read(snap, buckets=dirty, include_deleted=True)
+            out = ddf if out is None else out.unionByName(ddf, allowMissingColumns=True)
         cond = self._bounds_filter(bounds)
         for c, v in (eq or {}).items():
             cond = cond & (F.col(c) == F.lit(v))
@@ -1495,8 +1409,9 @@ class LakeTable:
         self, bounds: dict | None = None, snap: Snapshot | None = None, eq: dict | None = None
     ) -> DataFrame:
         """RAW row images (not LWW-resolved, tombstones included)
-        satisfying ``bounds`` and ``eq`` — the generalization of
-        :meth:`read_since_lsn` to any manifest-stat column.  Raw reads
+        satisfying ``bounds`` and ``eq`` over any manifest-stat column
+        (``{"lsn": (min_lsn, None)}`` is the incremental "every image
+        since lsn" read; files from pre-stats snapshots are kept).  Raw reads
         need no merge, so pruning is always file-granular: every entry
         (base, slice, or delta) disjoint from the predicates is skipped —
         MOR delta dirs are epoch-local in event time and lsn, so
@@ -1511,7 +1426,6 @@ class LakeTable:
         all_bounds = _eq_all_bounds(bounds, eq)
 
         snap = snap or self.current_snapshot()
-        cur_schema = self.schema(snap)
         by_schema: dict[str, list[str]] = {}
         for files in snap.buckets.values():
             for f in files:
@@ -1527,19 +1441,10 @@ class LakeTable:
                     )
                 else:
                     by_schema.setdefault(f["schema_id"], []).append(f["path"])
-        if not by_schema:
-            return self.spark.createDataFrame([], cur_schema).filter(F.lit(False))
-        parts = []
-        for sid, paths in sorted(by_schema.items()):
-            sch = T.StructType.fromJson(json.loads(snap.schema_json[sid]))
-            parts.append(_conform(self.spark.read.schema(sch).parquet(*paths), cur_schema))
-        out = parts[0]
-        for p_ in parts[1:]:
-            out = out.unionByName(p_)
         cond = self._bounds_filter(bounds)
         for c, v in eq.items():
             cond = cond & (F.col(c) == F.lit(v))
-        return out.filter(cond)
+        return self._scan(snap, by_schema).filter(cond)
 
     # ---------------------------------------------------- change data feed
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -1563,12 +1468,11 @@ class LakeTable:
         Requires the snapshots in range to still exist (``vacuum
         keep_last`` must cover it — same retention contract as
         time travel)."""
-        to_version = self.current_snapshot().version if to_version is None else to_version
+        cur = self.current_snapshot()
+        to_version = cur.version if to_version is None else to_version
         out = None
-        empty_schema = None
         for v in range(from_version + 1, to_version + 1):
             prev, cur = self.snapshot_at(v - 1), self.snapshot_at(v)
-            empty_schema = self.schema(cur)
             epoch_name = next((k for k, e in cur.applied.items() if e.get("snapshot") == v), "")
             if epoch_name.startswith(("compact-", "purge-", "rebucket-")):
                 continue
@@ -1582,14 +1486,7 @@ class LakeTable:
                         appended_buckets.append(int(b))
             if not added:
                 continue
-            cur_schema = self.schema(cur)
-            parts = []
-            for sid, paths in sorted(added.items()):
-                s = T.StructType.fromJson(json.loads(cur.schema_json[sid]))
-                parts.append(_conform(self.spark.read.schema(s).parquet(*paths), cur_schema))
-            new_rows = parts[0]
-            for p in parts[1:]:
-                new_rows = new_rows.unionByName(p)
+            new_rows = self._scan(cur, added)
             # MOR classification must survive manifest compaction (the
             # applied entry carrying lineage 'mode' is prunable): delta
             # append dirs are named v{N}-{uuid}-delta, so the added
@@ -1603,7 +1500,7 @@ class LakeTable:
                 # COW rewrite: subtract the buckets' previous full state
                 old_rows = _conform(
                     self.read(prev, buckets=sorted(set(appended_buckets)), include_deleted=True),
-                    cur_schema,
+                    self.schema(cur),
                 )
                 new_rows = new_rows.exceptAll(old_rows)
             changes = new_rows.withColumn(
@@ -1614,12 +1511,12 @@ class LakeTable:
             ).withColumn("_commit_version", F.lit(v).cast("long"))
             out = changes if out is None else out.unionByName(changes)
         if out is None:
-            base = empty_schema or self.schema()
-            schema = T.StructType(
-                [f for f in base.fields if f.name != DELETED_COL]
-                + [T.StructField("_change_type", T.StringType()), T.StructField("_commit_version", T.LongType())]
+            # no change rows: the same columns, from the last snapshot read
+            out = self._scan(cur, {}).select(
+                "*",
+                F.lit(None).cast("string").alias("_change_type"),
+                F.lit(None).cast("long").alias("_commit_version"),
             )
-            return self.spark.createDataFrame([], schema)
         return out.drop(DELETED_COL)
 
     # ------------------------------------------------------- maintenance
@@ -1678,18 +1575,12 @@ class LakeTable:
             bdir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
             if os.path.isdir(bdir):
                 buckets[str(b)] = [{"path": bdir, "schema_id": snap.current_schema_id}]
-        applied = dict(snap.applied)
-        applied[f"rebucket-{snap.version}-{n_buckets}"] = {"snapshot": version, "ts": time.time()}
-        new_snap = Snapshot(
+        new_snap = replace(
+            snap,
             version=version,
-            schema_json=dict(snap.schema_json),
-            current_schema_id=snap.current_schema_id,
             buckets=buckets,
-            applied=applied,
-            key_cols=snap.key_cols,
+            applied=_record_epoch(snap, f"rebucket-{snap.version}-{n_buckets}"),
             n_buckets=n_buckets,
-            props=snap.props,
-            order_cols=snap.order_cols,
         )
         self._write_snapshot(new_snap)
         return new_snap
@@ -1704,10 +1595,7 @@ class LakeTable:
             int(f[1:-5]) for f in os.listdir(self._snap_dir) if f.startswith("v") and f.endswith(".json")
         )
         keep_versions = versions[-keep_last:]
-        kept_snaps = []
-        for v in keep_versions:
-            with open(os.path.join(self._snap_dir, f"v{v}.json")) as fh:
-                kept_snaps.append(Snapshot(**json.load(fh)))
+        kept_snaps = [self.snapshot_at(v) for v in keep_versions]
         # staged (write-audit-publish) snapshots reference data dirs too
         # — a vacuum during the audit window must not eat them
         for name in self.list_staged():

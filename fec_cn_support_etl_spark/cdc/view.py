@@ -60,11 +60,12 @@ class MarkerStateView:
     artifacts: one parquet dir per synced version plus an atomically
     renamed JSON marker (``MARKER``), so a crashed refresh re-runs
     idempotently and a reader never sees a half-written view.
-    Subclasses set ``spark`` and ``root`` in their __init__."""
+    Subclasses set ``spark``, ``main`` and ``root`` in their __init__."""
 
     MARKER = "_VIEW.json"
 
     spark: SparkSession
+    main: LakeTable
     root: str
 
     def _marker_path(self) -> str:
@@ -89,6 +90,31 @@ class MarkerStateView:
         for d in os.listdir(self.root):
             if d.startswith("v"):
                 shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
+
+    def _pending_changes(self):
+        """Refresh preamble shared by every view: ``(from_snap, snap,
+        changes)`` — the last-synced snapshot, the table's current one
+        and the change feed between them — or ``(None, snap, None)``
+        when the view is already at the current version. Raises
+        ViewStale when the range is no longer retained."""
+        from_v = self.synced_version()
+        snap = self.main.current_snapshot()
+        if snap.version == from_v:
+            return None, snap, None
+        try:
+            from_snap = self.main.snapshot_at(from_v)
+        except FileNotFoundError as exc:  # snapshot vacuumed away
+            raise ViewStale(
+                f"last-synced snapshot v{from_v} is gone (vacuumed?); rebuild with create()"
+            ) from exc
+        try:
+            changes = self.main.read_changes(from_v, snap.version)
+        except FileNotFoundError as exc:  # a mid-range snapshot was vacuumed
+            raise ViewStale(
+                f"change-feed range v{from_v}..v{snap.version} is no longer fully retained; "
+                "rebuild with create()"
+            ) from exc
+        return from_snap, snap, changes
 
     def _publish(self, df: DataFrame, version: int) -> None:
         out = os.path.join(self.root, f"v{version}")
@@ -167,26 +193,11 @@ class IncrementalAggView(MarkerStateView):
         """Advance the view to the table's current version by the
         change-feed delta.  No-op (marker advance only) when the range
         holds nothing but maintenance commits."""
-        st = self._state()
-        from_v = int(st["synced_version"])
-        snap = self.main.current_snapshot()
+        from_snap, snap, changes = self._pending_changes()
         to_v = snap.version
-        if to_v == from_v:
-            return {"from": from_v, "to": to_v, "changed_groups": 0, "noop": True}
-        try:
-            from_snap = self.main.snapshot_at(from_v)
-        except FileNotFoundError as exc:  # snapshot vacuumed away
-            raise ViewStale(
-                f"last-synced snapshot v{from_v} is gone (vacuumed?); rebuild with create()"
-            ) from exc
-
-        try:
-            changes = self.main.read_changes(from_v, to_v)
-        except FileNotFoundError as exc:  # a mid-range snapshot was vacuumed
-            raise ViewStale(
-                f"change-feed range v{from_v}..v{to_v} is no longer fully retained; "
-                "rebuild with create()"
-            ) from exc
+        if changes is None:
+            return {"from": to_v, "to": to_v, "changed_groups": 0, "noop": True}
+        from_v = from_snap.version
         # the feed contributes only the CHANGED-KEY SET; both images are
         # re-read from the table (bucket-pruned) — see module docstring
         keys = changes.select(*snap.key_cols).distinct()

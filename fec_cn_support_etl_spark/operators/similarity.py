@@ -246,53 +246,29 @@ def _cos_micro(a, b):
     return F.floor(cosine_col(a, b) * F.lit(1_000_000.0)).cast("long")
 
 
-def cosine_neardup_exact(
-    df: DataFrame, id_col: str, vec_col: str, threshold_micro: int
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs, EXACT: every (id_a < id_b) pair
-    with floor(cosine * 1e6) >= threshold_micro.
-
-    All-pairs by construction — the small-corpus / ground-truth path
-    (the analogue of word_jaccard_pairs for the embedding modality);
-    ``cosine_neardup_chunked`` is the scale path. Output:
-    (id_a, id_b, cos_micro)."""
-    t = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    a, b = t.alias("a"), t.alias("b")
-    return (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            _cos_micro(F.col("a.v"), F.col("b.v")).alias("cos_micro"),
-        )
-        .filter(F.col("cos_micro") >= F.lit(int(threshold_micro)))
-    )
-
-
 def cosine_neardup_blocked(
     df: DataFrame, id_col: str, vec_col: str, threshold_micro: int
 ) -> DataFrame:
     """Exact all-pairs cosine membership pairs (id_a < id_b with
     floor(cos * 1e6) >= threshold_micro) via per-partition numpy
-    block-matmul — the round-7 execution of the ground-truth path
-    (guide §4.2: hand whole Arrow batches to vectorized native code).
+    block-matmul (guide §4.2: hand whole Arrow batches to vectorized
+    native code).
 
-    The JVM form (``cosine_neardup_exact``) evaluates an interpreted
-    192-term HOF fold per PAIR — 384M lambda evaluations at sf0.1
-    (2,000 vectors -> 2M pairs, 4.4s); here each partition runs ONE
-    BLAS matmul of its rows against the broadcast corpus matrix
-    (n_vecs x dim doubles — the exact path's inherent working set; the
-    driver-side collect is bounded by it and documented, like the
-    k-means centroid collect). Each unordered pair is emitted exactly
-    once, from its lower-id row's partition.
+    A SQL self-join would evaluate an interpreted 192-term HOF fold per
+    PAIR — 384M lambda evaluations at sf0.1 (2,000 vectors -> 2M
+    pairs); here each partition runs ONE BLAS matmul of its rows against
+    the broadcast corpus matrix (n_vecs x dim doubles — the exact path's
+    inherent working set; the driver-side collect is bounded by it and
+    documented, like the k-means centroid collect). Each unordered pair
+    is emitted exactly once, from its lower-id row's partition.
 
-    Membership equivalence: BLAS sums in a different order than the
-    SQL left-fold, but membership at the integer-micro threshold is
-    pinned by the fixture's measured 7e-4 cosine gap around it (~700x
-    double jitter) — the same argument that already makes the DuckDB
-    oracle's ``list_cosine_similarity`` agree with the JVM fold.
-    Pair-set equality vs ``cosine_neardup_exact`` is test-pinned at
-    sf0.1 (tests/test_similarity.py::test_blocked_matches_exact).
+    Membership is decided on floor(cos * 1e6), so summation-order
+    jitter (~1e-16) matters only for a pair within one micro-unit of
+    the threshold; at sf0.1 (915 pairs at 400200) the nearest pair on
+    either side sits 89 micro-units from it, which is also why the
+    DuckDB oracle's ``list_cosine_similarity`` agrees. The pair set
+    equals a numpy brute force over all pairs
+    (tests/test_similarity.py::test_blocked_matches_exact).
     """
     sdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     rows = sdf.collect()

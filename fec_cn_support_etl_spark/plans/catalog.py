@@ -1914,8 +1914,8 @@ def embedding_cosine_neardup_q(spark, sf_dir):
     """Embedding-cosine near-duplicate pairs — the semantic-dedup
     family member next to MinHash/SimHash (text) and exact-hash:
     every (id_a < id_b) pair with cosine >= 0.4002 (integer-micro
-    threshold; the fixture's cosine distribution has a 7e-4-wide gap
-    there, ~700x the cross-engine float jitter, so membership is
+    threshold; at sf0.1 no pair lies within 89 micro-units of it,
+    far beyond the cross-engine float jitter, so membership is
     engine-exact; the emitted columns are the membership pairs — the
     dedup deliverable). This is the exact all-pairs path, honest
     ground truth at fixture scale; the scale path is
@@ -1927,8 +1927,8 @@ def embedding_cosine_neardup_q(spark, sf_dir):
 
     # round 7: per-partition numpy block-matmul against the broadcast
     # corpus matrix instead of 2M interpreted 192-term HOF folds
-    # (4.4s -> 0.6s at sf0.1); membership identical — the threshold
-    # sits in the fixture's 7e-4 cosine gap, test- and oracle-pinned.
+    # (4.4s -> 0.6s at sf0.1); membership pinned against a numpy
+    # brute force and the DuckDB oracle.
     emb = _ts(spark, sf_dir, "embeddings")
     return cosine_neardup_blocked(emb, "vec_id", "embedding", 400200)
 

@@ -1,4 +1,4 @@
-"""Pure-Python brute-force references for the near-dup sketch tests."""
+"""Brute-force references (pure Python and numpy) for the near-dup tests."""
 
 from __future__ import annotations
 
@@ -24,3 +24,16 @@ def band_pairs(sigs: dict, bands: int) -> set:
         for band in range(bands):
             buckets.setdefault((band, tuple(sig[band * r : (band + 1) * r])), []).append(i)
     return {(a, b) for ids in buckets.values() for a in ids for b in ids if a < b}
+
+
+def cosine_pairs_micro(ids, vecs, threshold_micro: int) -> dict:
+    """Every (a < b) id pair with floor(cos * 1e6) >= ``threshold_micro``
+    over all pairs, as {(a, b): cos_micro} (numpy float64 matmul)."""
+    import numpy as np
+
+    ids = np.asarray(ids, dtype=np.int64)
+    m = np.asarray(vecs, dtype=np.float64)
+    n = np.sqrt((m * m).sum(axis=1))
+    micro = np.floor((m @ m.T) / np.outer(n, n) * 1_000_000.0)
+    ia, ib = np.nonzero((micro >= threshold_micro) & (ids[:, None] < ids[None, :]))
+    return {(int(ids[i]), int(ids[j])): int(micro[i, j]) for i, j in zip(ia, ib)}

@@ -667,3 +667,38 @@ def test_read_keys_bucket_pruned_lookup(spark, wal, tmp_path):
     assert t.read_keys(dead_key).count() == 0
     tomb = t.read_keys(dead_key, include_deleted=True)
     assert tomb.filter(F.col("_deleted")).count() == 1
+
+
+def test_read_columns_do_not_depend_on_scanned_files(spark, tmp_path):
+    """read(), read_keys() and read_where() return the same columns
+    whether or not a file is scanned: on a fresh table, over empty
+    buckets, for keys that hash only to empty buckets, and with data.
+    ``_deleted`` is hidden unless include_deleted=True."""
+    from fec_cn_support_etl_spark.cdc.table import BUCKET_COL, bucket_expr
+
+    t = runner.open_or_create(spark, str(tmp_path / "lake"), n_buckets=16)
+    every = runner.TABLE_SCHEMA.fieldNames()
+    live = [c for c in every if c != "_deleted"]
+
+    def check(read):
+        assert read(False).columns == live
+        assert read(True).columns == every
+
+    check(lambda d: t.read(include_deleted=d))
+    check(lambda d: t.read_keys([("r", "p")], include_deleted=d))
+    check(lambda d: t.read_where({"lsn": (0, None)}, include_deleted=d))
+
+    row = spark.createDataFrame(
+        [("r", "p", "c1", "python", "x", "h", 1, False)], runner.TABLE_SCHEMA
+    ).withColumn(BUCKET_COL, bucket_expr(["repo", "path"], 16))
+    b = row.first()[BUCKET_COL]
+    t.commit_merge(row, [b], epoch="0")
+    check(lambda d: t.read(buckets=[x for x in range(16) if x != b], include_deleted=d))
+    cands = spark.createDataFrame([(f"r{i}", "p") for i in range(64)], "repo string, path string")
+    keys = [tuple(r) for r in cands.filter(bucket_expr(["repo", "path"], 16) != b).collect()]
+    assert keys
+    check(lambda d: t.read_keys(keys, include_deleted=d))
+    assert t.read_keys(keys).count() == 0
+    check(lambda d: t.read(include_deleted=d))
+    check(lambda d: t.read_keys([("r", "p")], include_deleted=d))
+    assert t.read().count() == 1

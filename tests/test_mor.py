@@ -274,10 +274,10 @@ def test_change_feed_skips_maintenance_commits(spark, wal, tmp_path):
     assert t.read_changes(v1, v2).count() == 0  # compaction changes nothing logically
 
 
-def test_manifest_stats_prune_read_since_lsn(spark, wal, tmp_path):
-    """Commits record parquet-footer lsn ranges in the snapshot;
-    read_since_lsn prunes whole files driver-side and still returns
-    exactly the rows with lsn >= bound."""
+def test_manifest_stats_prune_raw_lsn_reads(spark, wal, tmp_path):
+    """Commits record parquet-footer lsn ranges in the snapshot; a raw
+    ``read_images_where`` on an lsn lower bound prunes whole files
+    driver-side and still returns exactly the rows with lsn >= bound."""
     mor = str(tmp_path / "mor")
     _replay(spark, wal, mor, mode="mor")
     t = LakeTable(spark, mor)
@@ -287,7 +287,7 @@ def test_manifest_stats_prune_read_since_lsn(spark, wal, tmp_path):
     full = t.read(snap, include_deleted=True).select("repo", "path", "lsn").toPandas()
     # raw images >= a cutoff in the middle of the lsn range
     cut = int(full["lsn"].quantile(0.6))
-    got = t.read_since_lsn(cut).select("lsn").toPandas()
+    got = t.read_images_where({"lsn": (cut, None)}).select("lsn").toPandas()
     assert (got["lsn"] >= cut).all()
     # every epoch-3+ event image above the cut appears (raw, incl. losers)
     import pandas as pd
@@ -299,9 +299,10 @@ def test_manifest_stats_prune_read_since_lsn(spark, wal, tmp_path):
     expect_min = raw[raw.lsn >= cut].groupby(["repo", "path"]).lsn.max()
     have = set(got["lsn"])
     assert set(expect_min).issubset(have)
-    # and pruning really skipped something: read_since_lsn with a cutoff
-    # above the global max reads zero files
-    assert t.read_since_lsn(int(full["lsn"].max()) + 1).count() == 0
+    # and pruning really skipped something: a cutoff above the global
+    # max lists zero files
+    past = t.read_images_where({"lsn": (int(full["lsn"].max()) + 1, None)})
+    assert past.inputFiles() == [] and past.count() == 0
 
 
 def test_snapshot_isolation_for_pinned_readers(spark, wal, tmp_path):
@@ -551,7 +552,7 @@ def test_footer_stats_missing_statistics_degrade_to_zero_deletes(tmp_path):
 
     def bucket_row(d):
         n_rows, n_deletes = _delta_counts(_footers(d).values())
-        stats = _agg_stats(_file_stats(d, ["lsn"]))
+        stats = _agg_stats(_file_stats(_footers(d), ["lsn"]))
         return _footer_stats_row({"__bucket": 3, "n_rows": n_rows, "n_deletes": n_deletes, "stats": stats})
 
     assert bucket_row(d_stats) == {"__bucket": 3, "n_keys": 4, "n_deletes": 2, "min_lsn": 10, "max_lsn": 13}

@@ -132,8 +132,8 @@ def test_mixed_bucket_never_file_pruned_stale_image_trap(spark, tmp_path):
 
 def test_read_images_where_prunes_epoch_local_deltas(spark, tmp_path):
     """Raw-image reads prune per ENTRY: MOR delta dirs are lsn-local, so
-    an lsn lower bound skips old delta dirs driver-side (the
-    read_since_lsn semantics generalized to any stat column)."""
+    an lsn lower bound skips old delta dirs driver-side and returns
+    exactly the images at or above it."""
     t, snap = _mk_clustered(spark, str(tmp_path / "lake"))
     for e in (1, 2, 3):
         lo = 10_000 * e
@@ -152,8 +152,9 @@ def test_read_images_where_prunes_epoch_local_deltas(spark, tmp_path):
     snap = t.current_snapshot()
     min_lsn = 30_000
     got = t.read_images_where({"lsn": (min_lsn, None)})
-    ref = t.read_since_lsn(min_lsn)
-    assert _rows(got) == _rows(ref) and got.count() == 50
+    # epoch 3's 50 delta images are the only ones at or above the bound
+    want = sorted((i % 400, (i * 37) % 4000, f"e3-{i}", i) for i in range(30_000, 30_050))
+    assert _rows(got) == want
     # epoch-1/2 delta entries (and the clustered base slices) are all
     # lsn-disjoint from the bound: raw planning keeps only epoch 3's
     n_entries = sum(len(fs) for fs in snap.buckets.values())
