@@ -1471,8 +1471,12 @@ class LakeTable:
         cur = self.current_snapshot()
         to_version = cur.version if to_version is None else to_version
         out = None
+        if to_version > from_version:
+            # each snapshot JSON carries the whole manifest: load each
+            # once and carry it forward as the next version's ``prev``
+            cur = self.snapshot_at(from_version)
         for v in range(from_version + 1, to_version + 1):
-            prev, cur = self.snapshot_at(v - 1), self.snapshot_at(v)
+            prev, cur = cur, self.snapshot_at(v)
             epoch_name = next((k for k, e in cur.applied.items() if e.get("snapshot") == v), "")
             if epoch_name.startswith(("compact-", "purge-", "rebucket-")):
                 continue

@@ -1,4 +1,11 @@
-"""Session cache hygiene for multi-consumer sketch intermediates.
+"""Session cache hygiene for multi-consumer intermediates.
+
+The registry also holds the FEC pipeline's four candidate-level tables
+(``plans.fec_pipeline.run_pipeline`` materializes the three support
+tables and the merged final table through :func:`cache`, and every
+output CSV reads them). Whoever writes those outputs releases them
+with :func:`release_all`; a caller that never does leaves them to the
+FIFO bound below, or to the next catalog-query construction.
 
 The sketch pipelines (minhash / simhash / LSH verify) persist small
 intermediates (shingles, signatures, candidate pairs) because several

@@ -13,8 +13,14 @@ Reference parity (file:line cites into /root/reference):
   totals + HAS_MONEY + mixed sort + funded/unfunded/all split
 
 Scale deltas vs the reference (same results, different physics):
-- Each support table is ONE distributed plan; no chunk loop, no
-  intermediate CSVs (DataFrames flow straight into the merge).
+- Each support table is ONE distributed plan; no chunk loop. The
+  reference writes each support table to CSV and merge_support.py
+  reads it back (individual_support.py:132-133,
+  merge_support.py:105-107,195-209); here ``run_pipeline``
+  materializes the three support tables and the merged ``final`` once
+  each (``_materialize``: persist + one count), the Spark counterpart
+  of those intermediate CSVs. The merge's year probes and every output
+  read the stored rows instead of re-running the fact scans.
 - ``run_all_offices`` computes the S / P / S+P triple from a single
   scan set: supports are computed once over offices={'S','P'} and the
   office-specific outputs are filters of the total (the reference
@@ -32,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.scalar import extract_year
+from ..operators import caching
 from ..operators.windows import top1_per_group
 
 SUPPORT_COLS = [
@@ -189,7 +196,11 @@ def _has_usable_year(df: DataFrame) -> bool:
     """reference merge_support.py:238-242: a support input participates
     in the composite-key merge only if it carries at least one non-null
     CAND_ELECTION_YR (schema tolerance for year-less intermediates).
-    take(1) is an early-exit scan of a small aggregated table."""
+    take(1) is an early-exit scan of a small aggregated table when
+    ``df`` is materialized, as ``run_pipeline``'s support tables are:
+    the probe then reads a few hundred stored per-candidate rows. Over
+    an unmaterialized plan it runs the whole upstream plan, fact scans
+    included."""
     if "CAND_ELECTION_YR" not in df.columns:
         return False
     return len(df.filter(F.col("CAND_ELECTION_YR").isNotNull()).take(1)) > 0
@@ -243,13 +254,34 @@ def merge_support(
     return merged.orderBy(F.asc_nulls_last("CAND_OFFICE_ST"), F.desc("TOTAL_SUPPORT"))
 
 
+def _materialize(df: DataFrame) -> DataFrame:
+    """Persist ``df`` through the ``operators.caching`` registry and fill
+    the cache with one ``count()``. Runs ONE Spark action (its jobs
+    evaluate ``df``'s whole plan once); every later action over the
+    returned frame, or over a plan built on it, reads the stored rows."""
+    df = caching.cache(df)
+    df.count()
+    return df
+
+
 def run_pipeline(inp: FecInputs, offices, target_year: str) -> dict[str, DataFrame]:
     """One office group end-to-end (the reference's 4-script sequence,
-    run_all.py:24-27) — intermediates stay as DataFrames."""
-    indiv = individual_support(inp, offices, target_year)
-    superpac = superpac_ie_support(inp, offices, target_year)
-    pac = pac_support(inp, offices, target_year)
-    final = merge_support(inp.cn, indiv, pac, superpac, offices, target_year)
+    run_all.py:24-27).
+
+    Runs Spark jobs before it returns: one ``_materialize`` action each
+    for ``individual_support``, ``superpac_ie_support`` and
+    ``pac_support`` (the fact scans), then ``merge_support``'s three
+    year probes over those stored tables, then one ``_materialize`` of
+    the merged ``final``. The six returned frames are the four stored
+    tables and two ``HAS_MONEY`` filters of ``final``, so writing them
+    runs no fact scan. The tables stay cached until
+    ``caching.release_all()`` (call it once the outputs are written) or
+    until the registry's FIFO bound (``caching.MAX_REGISTERED``) pushes
+    them out."""
+    indiv = _materialize(individual_support(inp, offices, target_year))
+    superpac = _materialize(superpac_ie_support(inp, offices, target_year))
+    pac = _materialize(pac_support(inp, offices, target_year))
+    final = _materialize(merge_support(inp.cn, indiv, pac, superpac, offices, target_year))
     return {
         "individual_support": indiv,
         "superpac_ie_support": superpac,
@@ -265,7 +297,11 @@ def run_all_offices(inp: FecInputs, target_year: str) -> dict[str, dict[str, Dat
     (offices={'S','P'}) and filter per office — every candidate has
     exactly one office, so senate+presidential IS a partition of total
     (the invariant validate_outputs.py:324-387 checks). Reference cost:
-    3 full pipeline runs, 6 itpas2 scans; here: 1 run."""
+    3 full pipeline runs, 6 itpas2 scans. Here, on the unit fixture
+    (tests/fec_fixture.py, 4 shuffle partitions), this call runs 50
+    Spark jobs (``run_pipeline``'s four materializations and three year
+    probes) and ``write_pipeline_outputs`` over its 18 outputs runs 18
+    more, one per CSV, with no fact scan."""
     total = run_pipeline(inp, ("S", "P"), target_year)
     out = {"total": total}
     for label, office in (("senate", "S"), ("presidential", "P")):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 
 import pandas as pd
 import pytest
@@ -117,3 +118,41 @@ def test_pipeline_output_layout(spark, tmp_path):
         with open(p, "rb") as fh:
             data = fh.read()
         assert data and not data.endswith(b"\n"), p
+
+
+def test_outputs_read_tables_materialized_once(spark, tmp_path):
+    """run_all_offices stores the four support tables, so the 18 writes
+    run one Spark job per CSV and scan no fact file: with itcont and
+    itpas2 deleted after run_all_offices, every CSV is still written
+    byte-identical to a run over the intact files. The tables it cached
+    are gone again after caching.release_all()."""
+    from fec_cn_support_etl_spark.operators import caching
+
+    root = tmp_path / "fec"
+    write_fixture(root)
+    inputs = P.FecInputs(
+        **{t: fec_src.read_fec_dir(spark, root / t, t) for t in ("cn", "cm", "ccl", "itcont", "itpas2")}
+    )
+    want = {
+        os.path.relpath(p, tmp_path / "want"): sha(p)
+        for p in write_pipeline_outputs(P.run_all_offices(inputs, YEAR), str(tmp_path / "want"), suffix="16")
+    }
+    caching.release_all()
+
+    sc = spark.sparkContext
+    before = {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+    groups = P.run_all_offices(inputs, YEAR)
+    for t in ("itcont", "itpas2"):
+        shutil.rmtree(root / t)
+    sc.setJobGroup("csv-writes", "write_pipeline_outputs over stored tables")
+    try:
+        written = write_pipeline_outputs(groups, str(tmp_path / "got"), suffix="16")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("csv-writes")) == len(written) == 18
+    assert {os.path.relpath(p, tmp_path / "got"): sha(p) for p in written} == want
+
+    cached = {r.id() for r in sc._jsc.sc().getRDDStorageInfo()} - before
+    assert cached
+    caching.release_all()
+    assert not cached & {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}

@@ -274,6 +274,26 @@ def test_change_feed_skips_maintenance_commits(spark, wal, tmp_path):
     assert t.read_changes(v1, v2).count() == 0  # compaction changes nothing logically
 
 
+def test_read_changes_loads_each_snapshot_once(spark, wal, tmp_path, monkeypatch):
+    """Every snapshot JSON carries the whole manifest: a feed over N
+    versions loads each of the N+1 snapshots it spans once, carrying
+    version v forward as v+1's predecessor instead of reloading it."""
+    mor = str(tmp_path / "mor")
+    _replay(spark, wal, mor, mode="mor")
+    t = LakeTable(spark, mor)
+    n = t.current_snapshot().version
+    loaded = []
+    snapshot_at = LakeTable.snapshot_at
+
+    def counting(self, version):
+        loaded.append(version)
+        return snapshot_at(self, version)
+
+    monkeypatch.setattr(LakeTable, "snapshot_at", counting)
+    assert t.read_changes(0).count() > 0
+    assert sorted(loaded) == list(range(n + 1))
+
+
 def test_manifest_stats_prune_raw_lsn_reads(spark, wal, tmp_path):
     """Commits record parquet-footer lsn ranges in the snapshot; a raw
     ``read_images_where`` on an lsn lower bound prunes whole files
