@@ -36,7 +36,11 @@ COW with a bucket partition spec.
 One scan path: every read lists its files per schema id and hands them
 to ``_scan``. One successor path: every commit derives snapshot N+1
 from its base with ``dataclasses.replace`` and publishes it through
-``_write_snapshot``.
+``_write_snapshot``. One entry path: every written bucket dir gets its
+manifest entry (footer stats, blooms) from ``_dir_entry``, and every
+copy-on-write rewrite (merge, compaction, purge, rebucket, staged merge)
+writes through ``_build_merge``. One pruning path: both predicate reads
+pick an entry's files with ``_select_files``.
 
 Crash safety: data files land first, the snapshot JSON is linked into
 place last (atomic on POSIX). A crash in between leaves orphan files
@@ -474,32 +478,77 @@ def _overlaps(stats: dict | None, bounds: dict) -> bool:
     return True
 
 
-def _eq_all_bounds(bounds: dict, eq: dict) -> dict:
-    """Predicate set for min/max pruning: an equality is also a
-    degenerate range; explicit bounds on the same column win the merge
-    (both are re-applied as filters, so pruning may use either soundly)."""
-    return {**{c: (v, v) for c, v in eq.items()}, **bounds}
-
-
-def _keep_stats(stats: dict | None, all_bounds: dict, eq: dict) -> bool:
-    """Shared keep predicate for entry-/file-level stats under a
-    conjunction of range bounds + eq probes (zone maps + blooms).
-    One definition so every pruned read path agrees."""
-    if not _overlaps(stats, all_bounds):
-        return False
+def _keep(stats: dict | None, all_bounds: dict, eq: dict, blooms: dict | None = None) -> bool:
+    """The one keep predicate of the pruned reads, for an entry or one
+    of its files: its min/max ``stats`` overlap every bound and its
+    ``blooms`` (column -> bloom) may contain every eq value.  ``blooms``
+    defaults to the entry-level blooms folded into ``stats``; a file
+    passes its sidecar blooms.  A missing stat or bloom keeps."""
     st = stats or {}
-    return all(_bloom_may_contain((st.get(c) or {}).get("bloom"), v) for c, v in eq.items())
+    if blooms is None:
+        blooms = {c: (st.get(c) or {}).get("bloom") for c in eq}
+    return _overlaps(st, all_bounds) and all(_bloom_may_contain(blooms.get(c), v) for c, v in eq.items())
 
 
-def _keep_file(
-    name: str, fst: dict, file_blooms: dict, all_bounds: dict, eq: dict
-) -> bool:
-    """Per-file keep: footer min/max from the manifest + the file's
-    sidecar bloom (missing sidecar/bloom keeps — conservative)."""
-    if not _overlaps(fst.get(name), all_bounds):
-        return False
-    nb = file_blooms.get(name) or {}
-    return all(_bloom_may_contain(nb.get(c), v) for c, v in eq.items())
+def _select_files(entry: dict, all_bounds: dict, eq: dict) -> tuple[list[str] | None, int]:
+    """The one per-entry file selector of the pruned reads:
+    ``(paths, n_pruned)``, the entry's files that may hold a matching row
+    (None when the entry is pruned whole) and how many it skipped.  An
+    entry with per-file stats (``fstats``) is narrowed file by file on
+    footer min/max and sidecar blooms, loaded lazily: only for a
+    surviving entry, only under an eq probe ({} = keep, conservative)."""
+    fst = entry.get("fstats")
+    if not _keep(entry.get("stats"), all_bounds, eq):
+        return None, len(fst or [1])
+    if not fst:
+        return [entry["path"]], 0
+    fb = _read_dir_blooms(entry["path"]) if eq else {}
+    kept = [n for n in sorted(fst) if _keep(fst[n], all_bounds, eq, fb.get(n) or {})]
+    return [os.path.join(entry["path"], n) for n in kept], len(fst) - len(kept)
+
+
+def _predicate(bounds: dict, eq: dict) -> Column:
+    """The filter a pruned read re-applies: every inclusive bound
+    (None = open side) and every equality, ANDed."""
+    cond = F.lit(True)
+    for c, (lo, hi) in bounds.items():
+        if lo is not None:
+            cond = cond & (F.col(c) >= F.lit(lo))
+        if hi is not None:
+            cond = cond & (F.col(c) <= F.lit(hi))
+    for c, v in eq.items():
+        cond = cond & (F.col(c) == F.lit(v))
+    return cond
+
+
+def _tombstone() -> Column:
+    """True on a tombstone row; a NULL ``_deleted`` is a live row."""
+    return F.coalesce(F.col(DELETED_COL), F.lit(False))
+
+
+def _hide_tombstones(df: DataFrame) -> DataFrame:
+    """A final-state read's rows without tombstones or ``_deleted``."""
+    if DELETED_COL not in df.columns:
+        return df
+    return df.filter(~_tombstone()).drop(DELETED_COL)
+
+
+def _link_json(path: str, doc: dict, conflict: str) -> None:
+    """Compare-and-swap JSON publish: ``doc`` goes to a tmp file that
+    ``os.link`` puts at ``path``.  The link fails with EEXIST if
+    ``path`` exists (unlike ``os.rename``, which silently clobbers), so
+    of two writers racing for one name exactly one wins; the loser gets
+    ``CommitConflict(conflict)``.  The tmp file is removed either way."""
+    d, base = os.path.split(path)
+    tmp = os.path.join(d, f".{base}.tmp.{os.getpid()}")
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh, indent=1)
+    try:
+        os.link(tmp, path)  # atomic commit point; EEXIST on race
+    except FileExistsError as e:
+        raise CommitConflict(conflict) from e
+    finally:
+        os.unlink(tmp)
 
 
 def _sortable_proxy(df: DataFrame, col: str) -> Column:
@@ -621,21 +670,12 @@ class LakeTable:
         return Snapshot(**d)
 
     def _write_snapshot(self, snap: Snapshot) -> None:
-        """Atomic compare-and-swap publish: ``os.link`` fails with
-        EEXIST if v{N} was already published (unlike ``os.rename``,
-        which silently clobbers), so two writers racing from the same
-        base snapshot cannot both win — the loser gets CommitConflict
-        and must re-read + retry (Iceberg's commit semantics)."""
-        tmp = os.path.join(self._snap_dir, f".v{snap.version}.json.tmp.{os.getpid()}")
-        final = os.path.join(self._snap_dir, f"v{snap.version}.json")
-        with open(tmp, "w") as fh:
-            json.dump(snap.__dict__, fh, indent=1)
-        try:
-            os.link(tmp, final)  # atomic commit point; EEXIST on race
-        except FileExistsError as e:
-            raise CommitConflict(f"snapshot v{snap.version} already published") from e
-        finally:
-            os.unlink(tmp)
+        """Atomic compare-and-swap publish of v{N} (``_link_json``): two
+        writers racing from the same base snapshot cannot both win — the
+        loser gets CommitConflict and must re-read + retry (Iceberg's
+        commit semantics)."""
+        path = os.path.join(self._snap_dir, f"v{snap.version}.json")
+        _link_json(path, snap.__dict__, f"snapshot v{snap.version} already published")
 
     def snapshot_at(self, version: int) -> Snapshot:
         """Load a specific snapshot version (time travel — Iceberg's
@@ -818,9 +858,7 @@ class LakeTable:
         if clean or out is None:
             cdf = self._scan(snap, clean)
             out = cdf if out is None else out.unionByName(cdf)
-        if not include_deleted and DELETED_COL in out.columns:
-            out = out.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
-        return out
+        return out if include_deleted else _hide_tombstones(out)
 
     def read_keys(
         self,
@@ -908,8 +946,8 @@ class LakeTable:
         """Everything commit_merge does EXCEPT the publish: write the
         touched buckets' data and derive the would-be snapshot. Returns
         ``(base_snap, new_snap)``. Shared by the atomic publish path
-        (commit_merge) and the staged write-audit-publish path
-        (stage_merge)."""
+        (commit_merge, and through it compact and purge_tombstones),
+        rebucket, and the staged write-audit-publish path (stage_merge)."""
         snap = base_snap or self.current_snapshot()
         version = snap.version + 1
         schema_json, schema_id = _next_schema(snap, new_schema)
@@ -920,7 +958,8 @@ class LakeTable:
         # winner's published files; the loser dir is vacuumed as orphan.
         out_dir = os.path.join(self._data_dir, f"v{version}-{uuid.uuid4().hex[:8]}")
         self._write_parquet(new_bucket_data, snap, out_dir)
-        buckets = {b: files for b, files in snap.buckets.items() if int(b) not in set(touched_buckets)}
+        touched = {int(b) for b in touched_buckets}
+        buckets = {b: files for b, files in snap.buckets.items() if int(b) not in touched}
         stat_cols = list(dict.fromkeys(self._stat_cols(snap) + list(fstat_cols or [])))
         for b in touched_buckets:
             bdir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
@@ -992,17 +1031,12 @@ class LakeTable:
         )
         name = name or f"wap-{epoch}"
         os.makedirs(self._staged_dir, exist_ok=True)
-        doc = {"base_version": snap.version, "snapshot": new_snap.__dict__}
-        tmp = os.path.join(self._staged_dir, f".{name}.json.tmp.{os.getpid()}")
-        final = os.path.join(self._staged_dir, f"{name}.json")
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, indent=1)
-        try:
-            os.link(tmp, final)  # a second stage under the same name loses
-        except FileExistsError as e:
-            raise CommitConflict(f"staged snapshot {name!r} already exists") from e
-        finally:
-            os.unlink(tmp)
+        # a second stage under the same name loses the CAS
+        _link_json(
+            os.path.join(self._staged_dir, f"{name}.json"),
+            {"base_version": snap.version, "snapshot": new_snap.__dict__},
+            f"staged snapshot {name!r} already exists",
+        )
         return name
 
     def list_staged(self) -> list[str]:
@@ -1307,64 +1341,46 @@ class LakeTable:
           out-of-bounds file could drop the WINNING image of a key and
           let a stale in-bounds delta image surface.  All-or-nothing
           only."""
-        eq = dict(eq or {})
-        all_bounds = _eq_all_bounds(bounds, eq)
-        # Bloom probes are only sound when the probe literal's Python
-        # type matches the column's Spark type: the bloom was built over
-        # the column's canonical encodings (e.g. b'0123' for a string
-        # column), while a mismatched probe hashes its own encoding
-        # (b'123' for int 123) — a PROVEN-miss verdict would then prune
-        # files whose rows match under the engine's ANSI coercion in the
-        # re-applied filter (ADVICE r6). Mismatches fall back to
-        # keep-everything for the bloom test; min/max pruning already
-        # keeps on cross-type comparisons via its TypeError guard.
-        schema = self.schema(snap)
-        by_name = {f.name: f.dataType for f in schema.fields}
-        eq_bloom = {
-            c: v for c, v in eq.items() if _bloom_probe_type_ok(by_name.get(c), v)
-        }
-
+        all_bounds, eq_bloom = self._prune_set(snap, bounds, eq)
         clean: dict[str, list[str]] = {}
         dirty: list[int] = []
         pruned_files = pruned_buckets = 0
         for b, files in snap.buckets.items():
-            if not any(_keep_stats(f.get("stats"), all_bounds, eq_bloom) for f in files):
+            if not any(_keep(f.get("stats"), all_bounds, eq_bloom) for f in files):
                 pruned_buckets += 1
                 pruned_files += sum(len(f.get("fstats") or [1]) for f in files)
-                continue
-            if all(f.get("resolved") for f in files):
+            elif all(f.get("resolved") for f in files):
                 for f in files:
-                    if not _keep_stats(f.get("stats"), all_bounds, eq_bloom):
-                        pruned_files += len(f.get("fstats") or [1])
-                        continue
-                    fst = f.get("fstats")
-                    if fst:
-                        # per-file blooms live in the entry dir's sidecar,
-                        # loaded lazily — only for surviving entries, only
-                        # under an eq probe ({} = keep, conservative)
-                        fb = _read_dir_blooms(f["path"]) if eq_bloom else {}
-                        kept = [
-                            n for n in sorted(fst) if _keep_file(n, fst, fb, all_bounds, eq_bloom)
-                        ]
-                        pruned_files += len(fst) - len(kept)
-                        clean.setdefault(f["schema_id"], []).extend(
-                            os.path.join(f["path"], n) for n in kept
-                        )
-                    else:
-                        clean.setdefault(f["schema_id"], []).append(f["path"])
+                    paths, n = _select_files(f, all_bounds, eq_bloom)
+                    pruned_files += n
+                    if paths is not None:
+                        clean.setdefault(f["schema_id"], []).extend(paths)
             else:
                 dirty.append(int(b))
         return clean, dirty, pruned_files, pruned_buckets
 
-    @staticmethod
-    def _bounds_filter(bounds: dict):
-        cond = F.lit(True)
-        for c, (lo, hi) in bounds.items():
-            if lo is not None:
-                cond = cond & (F.col(c) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(c) <= F.lit(hi))
-        return cond
+    def _prune_set(self, snap: Snapshot, bounds: dict, eq: dict | None) -> tuple[dict, dict]:
+        """``(all_bounds, eq_bloom)``, what the pruned reads test entries
+        and files against.  ``all_bounds`` is the min/max predicate set:
+        an equality is also a degenerate range; explicit bounds on the
+        same column win the merge (both are re-applied as filters, so
+        pruning may use either soundly).
+
+        ``eq_bloom`` holds the eq probes the blooms may answer: only
+        those whose literal's Python type matches the column's Spark
+        type.  The bloom was built over the column's canonical encodings
+        (e.g. b'0123' for a string column), while a mismatched probe
+        hashes its own encoding (b'123' for int 123) — a PROVEN-miss
+        verdict would then prune files whose rows match under the
+        engine's ANSI coercion in the re-applied filter (ADVICE r6).
+        Mismatches skip the bloom test; min/max pruning already keeps
+        on cross-type comparisons via its TypeError guard."""
+        eq = dict(eq or {})
+        by_name = {f.name: f.dataType for f in self.schema(snap).fields}
+        return (
+            {**{c: (v, v) for c, v in eq.items()}, **bounds},
+            {c: v for c, v in eq.items() if _bloom_probe_type_ok(by_name.get(c), v)},
+        )
 
     def read_where(
         self,
@@ -1397,13 +1413,8 @@ class LakeTable:
         if dirty:
             ddf = self.read(snap, buckets=dirty, include_deleted=True)
             out = ddf if out is None else out.unionByName(ddf, allowMissingColumns=True)
-        cond = self._bounds_filter(bounds)
-        for c, v in (eq or {}).items():
-            cond = cond & (F.col(c) == F.lit(v))
-        out = out.filter(cond)
-        if not include_deleted and DELETED_COL in out.columns:
-            out = out.filter(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
-        return out
+        out = out.filter(_predicate(bounds, eq or {}))
+        return out if include_deleted else _hide_tombstones(out)
 
     def read_images_where(
         self, bounds: dict | None = None, snap: Snapshot | None = None, eq: dict | None = None
@@ -1418,33 +1429,21 @@ class LakeTable:
         incremental audits / late-consumer catch-up over a time window
         list only that window's files.  ``eq`` probes consult the bloom
         index (``props['bloom_cols']``) exactly as :meth:`read_where`
-        does — including inside delta dirs, whose commits write the same
-        sidecars — so "every image this key/path ever had" audits touch
-        only files that may contain the value."""
+        does — the same ``_prune_set`` (type-mismatched probes never
+        bloom-prune) and the same ``_select_files``, including inside
+        delta dirs, whose commits write the same sidecars — so "every
+        image this key/path ever had" audits touch only files that may
+        contain the value."""
         bounds = dict(bounds or {})
-        eq = dict(eq or {})
-        all_bounds = _eq_all_bounds(bounds, eq)
-
         snap = snap or self.current_snapshot()
+        all_bounds, eq_bloom = self._prune_set(snap, bounds, eq)
         by_schema: dict[str, list[str]] = {}
         for files in snap.buckets.values():
             for f in files:
-                if not _keep_stats(f.get("stats"), all_bounds, eq):
-                    continue
-                fst = f.get("fstats")
-                if fst:
-                    fb = _read_dir_blooms(f["path"]) if eq else {}
-                    by_schema.setdefault(f["schema_id"], []).extend(
-                        os.path.join(f["path"], n)
-                        for n in sorted(fst)
-                        if _keep_file(n, fst, fb, all_bounds, eq)
-                    )
-                else:
-                    by_schema.setdefault(f["schema_id"], []).append(f["path"])
-        cond = self._bounds_filter(bounds)
-        for c, v in eq.items():
-            cond = cond & (F.col(c) == F.lit(v))
-        return self._scan(snap, by_schema).filter(cond)
+                paths, _ = _select_files(f, all_bounds, eq_bloom)
+                if paths is not None:
+                    by_schema.setdefault(f["schema_id"], []).extend(paths)
+        return self._scan(snap, by_schema).filter(_predicate(bounds, eq or {}))
 
     # ---------------------------------------------------- change data feed
     def read_changes(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -1509,9 +1508,7 @@ class LakeTable:
                 new_rows = new_rows.exceptAll(old_rows)
             changes = new_rows.withColumn(
                 "_change_type",
-                F.when(F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("delete")).otherwise(
-                    F.lit("upsert")
-                ),
+                F.when(_tombstone(), F.lit("delete")).otherwise(F.lit("upsert")),
             ).withColumn("_commit_version", F.lit(v).cast("long"))
             out = changes if out is None else out.unionByName(changes)
         if out is None:
@@ -1534,9 +1531,7 @@ class LakeTable:
         if DELETED_COL not in cur_schema.fieldNames():
             return snap
         full = self.read(snap, include_deleted=True)
-        doomed = full.filter(
-            F.coalesce(F.col(DELETED_COL), F.lit(False)) & (F.col("lsn") < below_lsn)
-        )
+        doomed = full.filter(_tombstone() & (F.col("lsn") < below_lsn))
         touched = [
             r[0]
             for r in doomed.select(bucket_expr(snap.key_cols, snap.n_buckets).alias("b")).distinct().collect()
@@ -1546,7 +1541,7 @@ class LakeTable:
         kept = (
             full.withColumn(BUCKET_COL, bucket_expr(snap.key_cols, snap.n_buckets))
             .filter(F.col(BUCKET_COL).isin(touched))
-            .filter(~(F.coalesce(F.col(DELETED_COL), F.lit(False)) & (F.col("lsn") < below_lsn)))
+            .filter(~(_tombstone() & (F.col("lsn") < below_lsn)))
             .repartition(max(1, len(touched)), F.col(BUCKET_COL))
         )
         return self.commit_merge(kept, touched, epoch=f"purge-{snap.version}-{below_lsn}", base_snap=snap)
@@ -1561,31 +1556,25 @@ class LakeTable:
         file size and every merge rewrites huge files; splitting 64 ->
         256 restores O(touched_keys/B) write amplification. Run it like
         a compaction (maintenance window); state digest is invariant
-        (test-pinned) and tombstones are carried."""
+        (test-pinned) and tombstones are carried.
+
+        It commits through ``_build_merge`` like every COW rewrite, so
+        its entries carry the same manifest stats (lsn min/max, blooms
+        of ``props['bloom_cols']``, ``resolved``) and pruned reads keep
+        pruning after it; it pays the same footer and bloom pass as
+        every COW commit."""
         snap = self.current_snapshot()
         if n_buckets == snap.n_buckets:
             return snap
-        full = self.read(snap, include_deleted=True)
-        version = snap.version + 1
-        out_dir = os.path.join(self._data_dir, f"v{version}-{uuid.uuid4().hex[:8]}")
-        self._write_parquet(
-            full.withColumn(BUCKET_COL, bucket_expr(snap.key_cols, n_buckets))
-            .repartition(max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism)), BUCKET_COL),
-            snap,
-            out_dir,
+        full = self.read(snap, include_deleted=True).withColumn(BUCKET_COL, bucket_expr(snap.key_cols, n_buckets))
+        n_write = max(1, min(n_buckets, self.spark.sparkContext.defaultParallelism))
+        # touched = old layout + new layout: a shrinking rebucket must
+        # not carry the old layout's high buckets into the new snapshot
+        touched = sorted({int(b) for b in snap.buckets} | set(range(n_buckets)))
+        _, new_snap = self._build_merge(
+            full.repartition(n_write, BUCKET_COL), touched, f"rebucket-{snap.version}-{n_buckets}", base_snap=snap
         )
-        buckets = {}
-        for b in range(n_buckets):
-            bdir = os.path.join(out_dir, f"{BUCKET_COL}={b}")
-            if os.path.isdir(bdir):
-                buckets[str(b)] = [{"path": bdir, "schema_id": snap.current_schema_id}]
-        new_snap = replace(
-            snap,
-            version=version,
-            buckets=buckets,
-            applied=_record_epoch(snap, f"rebucket-{snap.version}-{n_buckets}"),
-            n_buckets=n_buckets,
-        )
+        new_snap = replace(new_snap, n_buckets=n_buckets)
         self._write_snapshot(new_snap)
         return new_snap
 

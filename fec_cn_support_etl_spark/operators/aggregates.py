@@ -6,10 +6,12 @@ Reference parity (SURVEY.md §2.4):
   scripts/pac_support_corp_union.py:116-144). Spark form: one
   ``groupBy`` with ``sum(when(cond, x).otherwise(0))`` per bucket —
   single scan, single shuffle, map-side partial aggregation.
-- A4 collapse-duplicates: enforce one row per key by summing support
-  columns (reference scripts/merge_support.py:49-84).
 - A5 horizontal total + HAS_MONEY flag (reference
-  scripts/merge_support.py:265-277).
+  scripts/merge_support.py:265-277); ``fec_pipeline.merge_support``
+  calls it.
+
+A4 collapse-duplicates (reference scripts/merge_support.py:49-84) is
+``fec_pipeline.collapse_support``.
 """
 
 from __future__ import annotations
@@ -33,11 +35,6 @@ def conditional_sum_pivot(
     amt = F.col(amount) if isinstance(amount, str) else amount
     aggs = [F.sum(F.when(cond, amt).otherwise(F.lit(0))).alias(name) for name, cond in buckets.items()]
     return df.groupBy(*keys).agg(*aggs)
-
-
-def collapse_duplicates(df: DataFrame, keys: Sequence[str], sum_cols: Sequence[str]) -> DataFrame:
-    """One row per key; numeric columns summed, others dropped."""
-    return df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in sum_cols])
 
 
 def horizontal_total(

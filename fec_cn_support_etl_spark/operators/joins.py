@@ -1,13 +1,13 @@
 """Join operators.
 
 Reference parity (SURVEY.md §2.3):
-- J1/J2 dict-map lookups  -> broadcast left join (+ optional fill)
-  (reference scripts/individual_support.py:17-27,99;
-   scripts/pac_support_corp_union.py:59,105)
 - J3-J5 ``isin(set)`` membership filters -> LEFT SEMI join
   (reference scripts/individual_support.py:81,105 etc.)
-- U3 key-universe union -> union+distinct of key columns
-  (reference scripts/pac_support_corp_union.py:135-137)
+
+The J1/J2 dict-map lookups are inline ``F.broadcast`` left joins in
+``plans/fec_pipeline.py`` (``cmte_to_cand_map`` feeding
+``individual_support``); the U3 key-universe union is the full outer
+join of the catalog query ``key_universe_full_outer``.
 
 Scale notes: dimensions here (cm/cn/ccl; customer/nation) are orders of
 magnitude smaller than facts, so we *hint* broadcast — the fact side
@@ -17,32 +17,10 @@ later aggregations and avoid materializing payload columns.
 
 from __future__ import annotations
 
-from collections.abc import Mapping, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def broadcast_lookup(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str | Sequence[str],
-    payload: Sequence[str] | None = None,
-    fill: Mapping[str, object] | None = None,
-    how: str = "left",
-) -> DataFrame:
-    """fact LEFT JOIN broadcast(dim) ON key, keeping ``payload`` columns.
-
-    ``fill`` maps payload column -> default for misses (the reference's
-    ``.map(d).fillna(default)``).
-    """
-    keys = [key] if isinstance(key, str) else list(key)
-    if payload is not None:
-        dim = dim.select(*keys, *payload)
-    out = fact.join(F.broadcast(dim), on=keys, how=how)
-    if fill:
-        out = out.na.fill(dict(fill))
-    return out
 
 
 def semi_filter(fact: DataFrame, keys_df: DataFrame, key: str | Sequence[str], negate: bool = False) -> DataFrame:
@@ -74,14 +52,6 @@ def write_bucketed(
         w = w.sortBy(*list(sort_cols))
     w.saveAsTable(table_name)
     return table_name
-
-
-def key_universe(dfs: Sequence[DataFrame], key_cols: Sequence[str]) -> DataFrame:
-    """Distinct union of key columns across frames (the row spine)."""
-    out = dfs[0].select(*key_cols)
-    for d in dfs[1:]:
-        out = out.unionByName(d.select(*key_cols))
-    return out.distinct()
 
 
 def asof_join(

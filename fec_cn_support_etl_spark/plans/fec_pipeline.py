@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.scalar import extract_year
 from ..operators import caching
+from ..operators.aggregates import horizontal_total
 from ..operators.windows import top1_per_group
 
 SUPPORT_COLS = [
@@ -240,14 +241,8 @@ def merge_support(
         ["CORP_PAC_SUPPORT", "NONCONNECTED_PAC_SUPPORT"],
     )
     superpac_c = collapse_support(_prep(superpac).select(*keys, "SUPERPAC_IE_SUPPORT"), keys, ["SUPERPAC_IE_SUPPORT"])
-    merged = (
-        spine.join(indiv_c, keys, "left").join(pac_c, keys, "left").join(superpac_c, keys, "left")
-    ).na.fill({c: 0.0 for c in SUPPORT_COLS})
-    total = None
-    for c in SUPPORT_COLS:
-        total = F.col(c) if total is None else total + F.col(c)
-    merged = merged.withColumn("TOTAL_SUPPORT", total).withColumn(
-        "HAS_MONEY", (F.col("TOTAL_SUPPORT") > 0).cast("int")
+    merged = horizontal_total(
+        spine.join(indiv_c, keys, "left").join(pac_c, keys, "left").join(superpac_c, keys, "left"), SUPPORT_COLS
     )
     # asc_nulls_last: pandas sort_values puts NaN last (reference
     # merge_support.py:306); Spark's default asc puts NULL first

@@ -289,8 +289,9 @@ def test_bloom_type_mismatched_probe_never_prunes(spark, tmp_path):
     Spark type (int probe on a string column and vice versa) must skip
     bloom pruning entirely — the bloom hashed the COLUMN type's
     canonical encoding, so a cross-type probe could prove a false miss
-    while the re-applied ANSI filter would still match rows."""
-    t = _mk(spark, str(tmp_path / "lake-tm"))
+    while the re-applied ANSI filter would still match rows. Both id
+    and v are bloom-indexed, so the string probes on id meet a bloom."""
+    t = _mk(spark, str(tmp_path / "lake-tm"), props={"bloom_cols": "v,id"})
     snap = t.current_snapshot()
     # v is a string column: an int probe must not prune ANY bucket
     _, _, pf, pb = t._plan_pruned_scan({}, snap, eq={"v": 123})
@@ -303,3 +304,8 @@ def test_bloom_type_mismatched_probe_never_prunes(spark, tmp_path):
     want = _rows(t.read(snap).filter(F.col("id") == "123"))
     got = _rows(t.read_where(eq={"id": "123"}, snap=snap))
     assert want == got
+    # read_images_where prunes through the same type guard: "0123"
+    # hashes to another bloom key than the long 123, yet ANSI matches it
+    want_img = _rows(t.read_images_where({}, snap=snap).filter(F.col("id") == "0123"))
+    got_img = _rows(t.read_images_where(eq={"id": "0123"}, snap=snap))
+    assert want_img and got_img == want_img

@@ -10,6 +10,7 @@ import hashlib
 import os
 
 import pandas as pd
+from pyspark.sql import functions as F
 import pytest
 
 from fec_cn_support_etl_spark.cdc import events as ev
@@ -237,9 +238,11 @@ def test_purge_tombstones_and_vacuum(spark, wal, tmp_path):
 
 
 def test_rebucket_preserves_state_and_future_merges(spark, wal, tmp_path):
-    """Bucket-count evolution: rebucket(256) after a partial replay
-    leaves the state digest invariant, records the new count, and
-    subsequent epochs merge against the NEW bucketing correctly."""
+    """Bucket-count evolution: rebucket(32) after a partial replay
+    leaves the state digest invariant, records the new count, writes
+    entries with manifest stats (bounded reads keep pruning), and
+    subsequent epochs merge against the NEW bucketing correctly; a
+    shrinking rebucket(4) keeps the state and drops the old layout."""
     table_dir = str(tmp_path / "lake_rb")
     runner.replay(spark, wal, table_dir, n_buckets=8, stop_after=2, log=lambda *_: None)
     t = LakeTable(spark, table_dir)
@@ -247,6 +250,17 @@ def test_rebucket_preserves_state_and_future_merges(spark, wal, tmp_path):
     snap = t.rebucket(32)
     assert snap.n_buckets == 32 and len(snap.buckets) <= 32
     assert state_digest(table_state(spark, table_dir)) == before
+    # rebucket commits through the merge path: resolved entries with lsn
+    # stats, so an lsn-bounded read prunes and still equals the filter
+    entries = [f for fs in snap.buckets.values() for f in fs]
+    assert all(f.get("resolved") and "lsn" in f.get("stats", {}) for f in entries)
+    mins = sorted(f["stats"]["lsn"]["min"] for f in entries)
+    bounds = {"lsn": (None, mins[len(mins) // 2])}
+    _, dirty, pruned_files, _ = t._plan_pruned_scan(bounds, snap)
+    assert pruned_files >= 1 and not dirty
+    cols = ["repo", "path", "commit", "lang", "content_sha", "lsn"]
+    want = sorted(t.read(snap).filter(F.col("lsn") <= bounds["lsn"][1]).select(*cols).collect())
+    assert want and sorted(t.read_where(bounds, snap).select(*cols).collect()) == want
     # remaining epochs apply on the 32-bucket layout; final state must
     # still match the independent pandas replayer
     runner.replay(spark, wal, table_dir, n_buckets=8, log=lambda *_: None)
@@ -254,6 +268,9 @@ def test_rebucket_preserves_state_and_future_merges(spark, wal, tmp_path):
     want = pandas_oracle(wal, list(range(EPOCHS)))
     assert state_digest(got) == state_digest(want)
     assert LakeTable(spark, table_dir).current_snapshot().n_buckets == 32
+    small = t.rebucket(4)
+    assert small.n_buckets == 4 and set(small.buckets) <= {"0", "1", "2", "3"}
+    assert state_digest(table_state(spark, table_dir)) == state_digest(got)
 
 
 def test_time_travel_read_version(spark, wal, tmp_path):
