@@ -20,11 +20,17 @@ Maintained per group: exact ``n_rows`` (images observed), a
 Datasketches HLL sketch of ``distinct_col`` (JVM ``hll_sketch_agg`` /
 ``hll_union_agg`` — the same path as plans/catalog.py::
 approx_distinct_hll), and an MRL quantile sketch of ``quantile_col``
-(operators/qsketch.py, Arrow-batched applyInPandas).  State is
-group-cardinality, stored exactly like IncrementalAggView: one parquet
-dir per synced version + an atomically renamed JSON marker, so a
-crashed refresh re-runs idempotently (same version in, same artifact
-out) and a reader never sees a half-written view.
+(built and folded by operators/qsketch.py's ``build_sketches`` /
+``fold_sketches``, the same Spark path as the catalog rollup).
+
+Both classes here run the one maintenance loop of
+``cdc.view.MarkerStateView``: ``create`` publishes ``_build`` over the
+live rows, and the image-stream ``refresh`` publishes ``_fold(state,
+new upsert images)``; each class supplies only those two.  State is
+stored exactly like IncrementalAggView's: one parquet dir per synced
+version + an atomically renamed JSON marker, so a crashed refresh
+re-runs idempotently (same version in, same artifact out) and a reader
+never sees a half-written view.
 
 Accuracy is pinned the membership-with-proven-gap way (the HLL and
 quantile catalog queries' discipline): estimates are checked against
@@ -39,16 +45,14 @@ incremental and approximate-with-bounds at 100-TB image volumes.
 
 from __future__ import annotations
 
-import pandas as pd
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.heavyhitters import SHARD_COL as HH_SHARD_COL
-from ..operators.qsketch import DEFAULT_K, QuantileSketch
+from ..operators.heavyhitters import heavy_hitters, hh_merge, hh_summary, hh_truncate
+from ..operators.qsketch import DEFAULT_K, build_sketches, fold_sketches, sketch_quantiles
 from .table import LakeTable
-from .view import MarkerStateView
+from .view import MarkerStateView, outer_join_groups
 
 
 class SketchView(MarkerStateView):
@@ -80,130 +84,52 @@ class SketchView(MarkerStateView):
         self.lg_k = int(lg_k)
         self.qsketch_k = int(qsketch_k)
 
-    # --------------------------------------------------------- sketching
-    def _join_state(self, a: DataFrame, b: DataFrame) -> DataFrame:
-        """Full-outer join of two group-keyed state frames with
-        NULL-SAFE key equality (a join on column names would split a
-        NULL group into two mutually-incomplete rows — the same
-        discipline as IncrementalAggView's merge)."""
-        al, bl = a.alias("a"), b.alias("b")
-        cond = None
-        for c in self.group_cols:
-            e = F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
-            cond = e if cond is None else cond & e
-        sel = [F.coalesce(F.col(f"a.{c}"), F.col(f"b.{c}")).alias(c) for c in self.group_cols]
-        sel += [F.col(f"a.{c}").alias(c) for c in a.columns if c not in self.group_cols]
-        sel += [F.col(f"b.{c}").alias(c) for c in b.columns if c not in self.group_cols]
-        return al.join(bl, cond, "full_outer").select(*sel)
-
-    def _sketch(self, images: DataFrame) -> DataFrame:
-        """One sketch-state row per group over a batch of images.  The
-        JVM side (count + HLL) and the Python side (MRL quantiles) each
-        collapse to group cardinality before the tiny join."""
+    # ------------------------------------------------------- maintenance
+    def _build(self, rows: DataFrame) -> DataFrame:
+        """One sketch-state row per group.  The JVM side (count + HLL)
+        and the Python side (MRL quantiles) each collapse to group
+        cardinality before the tiny join."""
         g = self.group_cols
         aggs = [F.count(F.lit(1)).alias("n_rows")]
         if self.distinct_col:
             aggs.append(F.hll_sketch_agg(self.distinct_col, F.lit(self.lg_k)).alias("hll"))
-        out = images.groupBy(*g).agg(*aggs)
+        out = rows.groupBy(*g).agg(*aggs)
         if self.quantile_col:
-            qcol, k = self.quantile_col, self.qsketch_k
-            schema = T.StructType(
-                [images.schema[c] for c in g] + [T.StructField("qsk", T.BinaryType())]
-            )
-
-            def _build(pdf):
-                import pandas as pd
-
-                sk = QuantileSketch(k).add(pdf[qcol].to_numpy(dtype="float64"))
-                row = {c: [pdf[c].iloc[0]] for c in g}
-                row["qsk"] = [sk.to_bytes()]
-                return pd.DataFrame(row)
-
-            qs = images.select(*g, qcol).groupBy(*g).applyInPandas(_build, schema)
-            out = self._join_state(out, qs)
+            out = self._join_qsk(out, build_sketches(rows, g, self.quantile_col, self.qsketch_k, "qsk"))
         return out
 
-    def _merge(self, parts: DataFrame) -> DataFrame:
-        """Fold stacked sketch-state rows (old state + delta) per group:
-        counts add, HLL blobs union in the JVM, quantile blobs merge in
-        one Arrow batch per group.  Input is group-cardinality."""
+    def _fold(self, state: DataFrame, images: DataFrame) -> DataFrame:
+        """Stack the stored state with the new images' state and fold
+        per group: counts add, HLL blobs union in the JVM, quantile
+        blobs merge in one Arrow batch per group."""
         g = self.group_cols
+        parts = state.unionByName(self._build(images), allowMissingColumns=True)
         aggs = [F.sum("n_rows").alias("n_rows")]
         if self.distinct_col:
             aggs.append(F.hll_union_agg("hll").alias("hll"))
         out = parts.groupBy(*g).agg(*aggs)
         if self.quantile_col:
-            schema = T.StructType(
-                [parts.schema[c] for c in g] + [T.StructField("qsk", T.BinaryType())]
-            )
-
-            def _fold(pdf):
-                import pandas as pd
-
-                blobs = [b for b in pdf["qsk"] if b is not None]
-                merged = QuantileSketch.merge([QuantileSketch.from_bytes(b) for b in blobs])
-                row = {c: [pdf[c].iloc[0]] for c in g}
-                row["qsk"] = [merged.to_bytes()]
-                return pd.DataFrame(row)
-
-            qs = parts.select(*g, "qsk").groupBy(*g).applyInPandas(_fold, schema)
-            out = self._join_state(out, qs)
+            out = self._join_qsk(out, fold_sketches(parts, g, "qsk"))
         return out
 
-    # ------------------------------------------------------- maintenance
-    def create(self) -> dict:
-        """Seed the view from the table's LIVE rows at the current
-        version (images superseded before the view existed were never
-        observable), then advance by the image stream."""
-        snap = self.main.current_snapshot()
-        self._wipe_artifacts()
-        self._publish(self._sketch(self.main.read(snap=snap)), snap.version)
-        return {"synced_version": snap.version, "full_build": True}
-
-    def refresh(self) -> dict:
-        """Fold every upsert image committed since the last sync.
-        Deletes are ignored (sketches do not retract — insert-only image
-        -stream semantics, see module docstring)."""
-        from_snap, snap, changes = self._pending_changes()
-        if changes is None:
-            return {"from": snap.version, "to": snap.version, "noop": True}
-        images = changes.filter(F.col("_change_type") == "upsert").drop(
-            "_change_type", "_commit_version"
-        )
-        delta = self._sketch(images)
-        merged = self._merge(self.read().unionByName(delta, allowMissingColumns=True))
-        self._publish(merged, snap.version)
-        return {"from": from_snap.version, "to": snap.version, "noop": False}
+    def _join_qsk(self, jvm: DataFrame, qs: DataFrame) -> DataFrame:
+        joined, keys = outer_join_groups(jvm, qs, self.group_cols)
+        rest = [F.col(f"a.{c}") for c in jvm.columns if c not in self.group_cols]
+        return joined.select(*keys, *rest, F.col("b.qsk").alias("qsk"))
 
     # --------------------------------------------------------- estimates
     def estimates(self, quantiles: list[float] | None = None) -> DataFrame:
         """Human-facing view: group cols, exact n_rows, approx distinct
         (HLL estimate), and requested quantile estimates — all derived
         from the maintained state, no table access."""
-        from ..operators.qsketch import _quantile_labels
-
         df = self.read()
         cols = [*self.group_cols, "n_rows"]
         if self.distinct_col:
             df = df.withColumn("approx_distinct", F.hll_sketch_estimate("hll"))
             cols.append("approx_distinct")
         if self.quantile_col and quantiles:
-            labels = _quantile_labels(quantiles)
-
-            def _q_udf(q):
-                @F.pandas_udf(T.DoubleType())
-                def f(b: pd.Series) -> pd.Series:
-                    return b.map(
-                        lambda x: QuantileSketch.from_bytes(x).quantile(q)
-                        if x is not None
-                        else None
-                    )
-
-                return f
-
-            for q, lbl in zip(quantiles, labels):
-                df = df.withColumn(lbl, _q_udf(q)("qsk"))
-            cols.extend(labels)
+            est = df.select(*cols, sketch_quantiles("qsk", quantiles).alias("_q"))
+            return est.select(*cols, "_q.*")
         return df.select(*cols)
 
 
@@ -288,39 +214,22 @@ class HeavyHittersView(MarkerStateView):
 
     # ------------------------------------------------------- maintenance
     def _summary(self, images: DataFrame) -> tuple[DataFrame, DataFrame]:
-        from ..operators.heavyhitters import hh_summary
-
         return hh_summary(images, self.group_cols, self.item_col, self.n_shards, self.keep)
 
-    def create(self) -> dict:
-        snap = self.main.current_snapshot()
-        self._wipe_artifacts()
-        self._publish(self._pack(*self._summary(self.main.read(snap=snap))), snap.version)
-        return {"synced_version": snap.version, "full_build": True}
+    def _build(self, rows: DataFrame) -> DataFrame:
+        return self._pack(*self._summary(rows))
 
-    def refresh(self) -> dict:
-        from ..operators.heavyhitters import hh_merge, hh_truncate
-
-        from_snap, snap, changes = self._pending_changes()
-        if changes is None:
-            return {"from": snap.version, "to": snap.version, "noop": True}
-        images = changes.filter(F.col("_change_type") == "upsert").drop(
-            "_change_type", "_commit_version"
-        )
-        merged = hh_merge([self._unpack(self.read()), self._summary(images)], self.group_cols)
+    def _fold(self, state: DataFrame, images: DataFrame) -> DataFrame:
+        merged = hh_merge([self._unpack(state), self._summary(images)], self.group_cols)
         # SpaceSaving re-truncation: without it, state grows by up to
         # `keep` rows per shard per refresh (hh_merge keeps the union);
         # with it the view is O(n_shards * keep) per group FOREVER, and
         # the dropped counts fold into the tail bound soundly.
-        merged = hh_truncate(*merged, self.group_cols, self.keep)
-        self._publish(self._pack(*merged), snap.version)
-        return {"from": from_snap.version, "to": snap.version, "noop": False}
+        return self._pack(*hh_truncate(*merged, self.group_cols, self.keep))
 
     # --------------------------------------------------------- estimates
     def heavy_hitters(self, threshold: int) -> DataFrame:
         """Guaranteed-candidate heavy hitters of the image stream with
         two-sided bounds, decoded from the maintained state — no table
         access."""
-        from ..operators.heavyhitters import heavy_hitters
-
         return heavy_hitters(*self._unpack(self.read()), self.group_cols, threshold)

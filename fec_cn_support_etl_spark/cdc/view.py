@@ -56,11 +56,15 @@ class ViewStale(RuntimeError):
 
 
 class MarkerStateView:
-    """Shared state machinery for incrementally-maintained view
+    """The one maintenance loop for incrementally-maintained view
     artifacts: one parquet dir per synced version plus an atomically
     renamed JSON marker (``MARKER``), so a crashed refresh re-runs
     idempotently and a reader never sees a half-written view.
-    Subclasses set ``spark``, ``main`` and ``root`` in their __init__."""
+    Subclasses set ``spark``, ``main`` and ``root`` in their __init__
+    and supply ``_build`` (live rows -> state, for ``create``) and
+    ``_fold`` (state + new upsert images -> state, for the image-stream
+    ``refresh``); :class:`IncrementalAggView` replaces ``refresh`` with
+    its retraction delta."""
 
     MARKER = "_VIEW.json"
 
@@ -132,6 +136,41 @@ class MarkerStateView:
         for d in vdirs[:-2]:
             shutil.rmtree(os.path.join(self.root, d), ignore_errors=True)
 
+    def create(self) -> dict:
+        """Full build over the table's live rows at the current version
+        (the one full scan the view ever pays; every later sync is
+        delta-sized)."""
+        snap = self.main.current_snapshot()
+        self._wipe_artifacts()
+        self._publish(self._build(self.main.read(snap=snap)), snap.version)
+        return {"synced_version": snap.version, "full_build": True}
+
+    def refresh(self) -> dict:
+        """Fold every upsert image committed since the last sync into
+        the stored state.  Deletes are ignored: insert-only synopses do
+        not retract (image-stream semantics, cdc/sketch_view.py)."""
+        from_snap, snap, changes = self._pending_changes()
+        if changes is None:
+            return {"from": snap.version, "to": snap.version, "noop": True}
+        images = changes.filter(F.col("_change_type") == "upsert").drop(
+            "_change_type", "_commit_version"
+        )
+        self._publish(self._fold(self.read(), images), snap.version)
+        return {"from": from_snap.version, "to": snap.version, "noop": False}
+
+
+def outer_join_groups(a: DataFrame, b: DataFrame, group_cols: list[str]):
+    """Full-outer join of two group-keyed frames, aliased ``a`` and
+    ``b``, with NULL-SAFE key equality (a join on column names would
+    split a NULL group into two mutually-incomplete rows).  Returns the
+    joined frame and the coalesced group-key columns to select."""
+    cond = None
+    for g in group_cols:
+        c = F.col(f"a.{g}").eqNullSafe(F.col(f"b.{g}"))
+        cond = c if cond is None else (cond & c)
+    keys = [F.coalesce(F.col(f"a.{g}"), F.col(f"b.{g}")).alias(g) for g in group_cols]
+    return a.alias("a").join(b.alias("b"), cond, "full_outer"), keys
+
 
 class IncrementalAggView(MarkerStateView):
     """Grouped COUNT(*) + SUM(cols) over a LakeTable's live rows,
@@ -181,13 +220,8 @@ class IncrementalAggView(MarkerStateView):
         ]
         return df.groupBy(*self.group_cols).agg(*aggs)
 
-    def create(self) -> dict:
-        """Full build at the table's current version (the one full scan
-        the view ever pays; every later sync is delta-sized)."""
-        snap = self.main.current_snapshot()
-        self._wipe_artifacts()
-        self._publish(self._contrib(self.main.read(snap=snap), +1), snap.version)
-        return {"synced_version": snap.version, "full_build": True}
+    def _build(self, rows: DataFrame) -> DataFrame:
+        return self._contrib(rows, +1)
 
     def refresh(self) -> dict:
         """Advance the view to the table's current version by the
@@ -219,29 +253,14 @@ class IncrementalAggView(MarkerStateView):
             )
             .persist()
         )
-        old = self.read().alias("o")
-        d = delta.alias("d")
-        cond = None
-        for g in self.group_cols:
-            c = F.col(f"o.{g}").eqNullSafe(F.col(f"d.{g}"))
-            cond = c if cond is None else (cond & c)
-        merged = (
-            old.join(d, cond, "full_outer")
-            .select(
-                *[F.coalesce(F.col(f"o.{g}"), F.col(f"d.{g}")).alias(g) for g in self.group_cols],
-                (F.coalesce(F.col("o.n_rows"), F.lit(0)) + F.coalesce(F.col("d.n_rows"), F.lit(0))).alias(
-                    "n_rows"
-                ),
-                *[
-                    (
-                        F.coalesce(F.col(f"o.sum_{c}"), F.lit(0))
-                        + F.coalesce(F.col(f"d.sum_{c}"), F.lit(0))
-                    ).alias(f"sum_{c}")
-                    for c in self.sum_cols
-                ],
-            )
-            .filter(F.col("n_rows") != 0)
-        )
+        joined, group_keys = outer_join_groups(self.read(), delta, self.group_cols)
+
+        def _add(c):
+            return (F.coalesce(F.col(f"a.{c}"), F.lit(0)) + F.coalesce(F.col(f"b.{c}"), F.lit(0))).alias(c)
+
+        merged = joined.select(
+            *group_keys, _add("n_rows"), *[_add(f"sum_{c}") for c in self.sum_cols]
+        ).filter(F.col("n_rows") != 0)
         try:
             n_changed = delta.count()  # materializes the cache for the publish
             self._publish(merged, to_v)

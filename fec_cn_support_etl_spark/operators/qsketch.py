@@ -27,12 +27,16 @@ verify accuracy empirically with the TRUE rank-interval audit
 (plans/catalog.py::quantile_sketch_rollup), the same
 membership-with-proven-gap oracle pattern as the HLL query.
 
-Spark integration is Arrow-batched ``applyInPandas`` (never per-row
-Python): one task per (group, day) builds the day sketch; one task per
-group folds its days.  100-TB shape: a hot day can be sharded further
-(group by (day, hash(key) % S)) and the shards merged — mergeability
-is exactly what makes that free; the per-group final fold handles
-#days·#shards sketch rows, not data rows.
+Spark integration is one Arrow-batched ``applyInPandas`` path (never
+per-row Python): ``build_sketches`` builds one sketch per group of
+rows and ``fold_sketches`` merges one group's sketches.  The catalog
+rollup (``build_day_sketches`` per (group, day), ``rollup_sketches``
+per group) and ``cdc.sketch_view.SketchView`` (create and refresh)
+both call them; ``sketch_quantiles`` decodes stored blobs into
+estimates.  100-TB shape: a hot day can be sharded further (group by
+(day, hash(key) % S)) and the shards merged — mergeability is exactly
+what makes that free; the per-group final fold handles #days·#shards
+sketch rows, not data rows.
 """
 
 from __future__ import annotations
@@ -40,6 +44,9 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: items kept per level before a compaction promotes half of them.
 DEFAULT_K = 256
@@ -161,69 +168,84 @@ class QuantileSketch:
 
 
 # ---------------------------------------------------------------- spark
-def quantile_label(q: float) -> str:
-    """Column label for quantile ``q``: ``0.95 -> 'q95'``, ``0.999 ->
+def _quantile_labels(quantiles: list[float]) -> list[str]:
+    """Column label per quantile: ``0.95 -> 'q95'``, ``0.999 ->
     'q99_9'``.  Fraction-safe — ``int(q*100)`` would truncate
     ``0.29*100 == 28.999...`` to ``q28`` and collide 0.99 with 0.999."""
-    return "q" + ("%g" % round(q * 100, 9)).replace(".", "_").replace("-", "m")
-
-
-def _quantile_labels(quantiles: list[float]) -> list[str]:
-    labels = [quantile_label(q) for q in quantiles]
+    labels = ["q" + ("%g" % round(q * 100, 9)).replace(".", "_").replace("-", "m") for q in quantiles]
     if len(set(labels)) != len(labels):
         raise ValueError(f"quantile labels collide: {labels} for {quantiles}")
     return labels
 
 
-def build_day_sketches(df, group_cols: list[str], day_col: str, value_col: str, k: int = DEFAULT_K):
-    """(group..., day) -> one sketch row: ``sketch`` BINARY + exact
-    ``n_rows``.  Arrow-batched; the sort inside ``add`` makes the
-    output independent of how Spark distributed or ordered the rows."""
-    from pyspark.sql import types as T
+def _per_group(df, keys: list[str], fields: list, fn):
+    """The one grouped Spark path of the build and the fold: Arrow-
+    batched ``applyInPandas``, one call per ``keys`` group, emitting the
+    group's keys plus ``fn(pdf)`` as the values of ``fields``."""
+    schema = T.StructType([df.schema[c] for c in keys] + fields)
 
-    schema = T.StructType(
-        [df.schema[c] for c in group_cols]
-        + [
-            df.schema[day_col],
-            T.StructField("sketch", T.BinaryType()),
-            T.StructField("n_rows", T.LongType()),
-        ]
-    )
-
-    def _build(pdf):
-        import pandas as pd
-
-        sk = QuantileSketch(k).add(pdf[value_col].to_numpy(dtype="float64"))
-        row = {c: [pdf[c].iloc[0]] for c in group_cols + [day_col]}
-        row["sketch"] = [sk.to_bytes()]
-        row["n_rows"] = [len(pdf)]
+    def _apply(pdf):
+        row = {c: [pdf[c].iloc[0]] for c in keys}
+        row.update((f.name, [v]) for f, v in zip(fields, fn(pdf)))
         return pd.DataFrame(row)
 
-    return df.groupBy(*group_cols, day_col).applyInPandas(_build, schema)
+    return df.groupBy(*keys).applyInPandas(_apply, schema)
+
+
+def build_sketches(df, keys: list[str], value_col: str, k: int = DEFAULT_K, sketch_col: str = "sketch"):
+    """The grouped build: ``keys`` -> one row of ``sketch_col`` BINARY
+    over ``value_col`` + exact ``n_rows``.  The sort inside ``add``
+    makes the bytes independent of how Spark distributed or ordered
+    the rows."""
+    fields = [T.StructField(sketch_col, T.BinaryType()), T.StructField("n_rows", T.LongType())]
+
+    def _build(pdf):
+        return QuantileSketch(k).add(pdf[value_col].to_numpy(dtype="float64")).to_bytes(), len(pdf)
+
+    return _per_group(df.select(*keys, value_col), keys, fields, _build)
+
+
+def fold_sketches(df, keys: list[str], sketch_col: str = "sketch", quantiles: list[float] = ()):
+    """The grouped fold: ``keys`` -> the merged ``sketch_col``, the
+    summed exact ``n_rows`` and one DOUBLE estimate per quantile.  A
+    merge is a pure function of the multiset of its inputs, so the
+    bytes do not depend on the order the group's rows arrive in."""
+    labels = _quantile_labels(quantiles)
+    fields = [T.StructField(sketch_col, T.BinaryType()), T.StructField("n_rows", T.LongType())]
+    fields += [T.StructField(lbl, T.DoubleType()) for lbl in labels]
+
+    def _fold(pdf):
+        merged = QuantileSketch.merge(
+            [QuantileSketch.from_bytes(b) for b in pdf[sketch_col] if b is not None]
+        )
+        return merged.to_bytes(), int(pdf["n_rows"].sum()), *[merged.quantile(q) for q in quantiles]
+
+    return _per_group(df.select(*keys, sketch_col, "n_rows"), keys, fields, _fold)
+
+
+def sketch_quantiles(sketch_col: str, quantiles: list[float]):
+    """One struct column of DOUBLE estimates, a field per quantile
+    labelled as in ``fold_sketches``; each blob decodes once for all
+    quantiles, and a NULL blob gives NULL estimates."""
+    labels = _quantile_labels(quantiles)
+
+    @F.pandas_udf(T.StructType([T.StructField(lbl, T.DoubleType()) for lbl in labels]))
+    def _estimates(blobs: pd.Series) -> pd.DataFrame:
+        sketches = (None if b is None else QuantileSketch.from_bytes(b) for b in blobs)
+        rows = [[None] * len(quantiles) if s is None else [s.quantile(q) for q in quantiles] for s in sketches]
+        return pd.DataFrame(rows, columns=labels, dtype="float64")
+
+    return _estimates(sketch_col)
+
+
+def build_day_sketches(df, group_cols: list[str], day_col: str, value_col: str, k: int = DEFAULT_K):
+    """(group..., day) -> one sketch row: ``sketch`` BINARY + exact
+    ``n_rows``."""
+    return build_sketches(df, [*group_cols, day_col], value_col, k)
 
 
 def rollup_sketches(day_df, group_cols: list[str], day_col: str, quantiles: list[float]):
-    """Fold each group's day sketches (sorted by day — canonical order)
-    into one and emit quantile estimates + total exact n.  Input is
-    sketch rows (one per group×day), so this stage shuffles KBs."""
-    from pyspark.sql import types as T
-
-    labels = _quantile_labels(quantiles)
-    schema = T.StructType(
-        [day_df.schema[c] for c in group_cols]
-        + [T.StructField("n_rows", T.LongType())]
-        + [T.StructField(lbl, T.DoubleType()) for lbl in labels]
-    )
-
-    def _fold(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values(day_col, kind="mergesort")
-        merged = QuantileSketch.merge([QuantileSketch.from_bytes(b) for b in pdf["sketch"]])
-        row = {c: [pdf[c].iloc[0]] for c in group_cols}
-        row["n_rows"] = [int(pdf["n_rows"].sum())]
-        for q, lbl in zip(quantiles, labels):
-            row[lbl] = [merged.quantile(q)]
-        return pd.DataFrame(row)
-
-    return day_df.groupBy(*group_cols).applyInPandas(_fold, schema)
+    """Fold each group's ``day_col`` sketches into one and emit quantile
+    estimates + total exact n.  Input is sketch rows (one per
+    group×day), so this stage shuffles KBs."""
+    return fold_sketches(day_df, group_cols, "sketch", quantiles).drop("sketch")

@@ -51,6 +51,7 @@ from ..operators.dedup import (
     minhash_signatures,
     with_sig_planes,
 )
+from .pipeline import read_file_stream
 
 _PAIRS_SCHEMA = T.StructType(
     [
@@ -116,22 +117,9 @@ def stream_neardup_pairs(
         sig_all.unpersist()
         spark.catalog.clearCache()
 
-    schema = spark.read.parquet(docs_path).schema
-    if os.path.isfile(docs_path):
-        reader = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", os.path.basename(docs_path))
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(os.path.dirname(docs_path))
-        )
-    else:
-        reader = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .parquet(docs_path)
-        )
     q = (
-        reader.writeStream.foreachBatch(_apply)
+        read_file_stream(spark, docs_path, max_files_per_trigger)
+        .writeStream.foreachBatch(_apply)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

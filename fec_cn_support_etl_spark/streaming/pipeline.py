@@ -26,6 +26,33 @@ from ..cdc.engine import apply_epoch
 from ..cdc.table import LakeTable
 
 
+def read_file_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
+    """Parquet file-stream source over ``path`` with the schema of the
+    files already there.  The file source needs a directory, so a
+    single file is read as its parent with a glob filter on its name."""
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    if os.path.isfile(path):
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(path)
+    return reader.parquet(path)
+
+
+def drain_to_memory(stream: DataFrame, sink_table: str, output_mode: str) -> DataFrame:
+    """Run ``stream`` to completion (availableNow) into the memory sink
+    ``sink_table`` and return that table as a batch DataFrame."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(sink_table)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return stream.sparkSession.table(sink_table)
+
+
 def stream_cdc_ingest(
     spark: SparkSession,
     wal_dir: str,
@@ -103,26 +130,9 @@ def stream_dedup(
     memory stays bounded by the horizon (the streaming analog of
     operators.dedup.exact_dedup, for at-least-once upstream sources).
     Run to completion with availableNow; returns the deduped rows."""
-    schema = spark.read.parquet(events_path).schema
-    if os.path.isfile(events_path):
-        reader = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", os.path.basename(events_path))
-            .parquet(os.path.dirname(events_path))
-        )
-    else:
-        reader = spark.readStream.schema(schema).parquet(events_path)
-    stream = reader.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = read_file_stream(spark, events_path).withColumn("ts", F.col("ts").cast("timestamp"))
     deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(list(key_cols))
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return drain_to_memory(deduped, sink_table, "append")
 
 
 def windowed_event_agg(
@@ -135,20 +145,9 @@ def windowed_event_agg(
     """Tumbling-window agg with watermark, run to completion via
     availableNow + memory sink; returns the complete result as a
     batch DataFrame (window_start formatted for oracle comparison)."""
-    schema = spark.read.parquet(events_path).schema
-    # the file stream source needs a directory; point at the parent with
-    # a glob filter when given a single parquet file
-    if os.path.isfile(events_path):
-        reader = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", os.path.basename(events_path))
-            .parquet(os.path.dirname(events_path))
-        )
-    else:
-        reader = spark.readStream.schema(schema).parquet(events_path)
     # parquet TIMESTAMP_NTZ -> session-TZ timestamp (watermarks require
     # TIMESTAMP; session TZ is UTC so the wall-clock value is unchanged)
-    stream = reader.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = read_file_stream(spark, events_path).withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), F.col("event_type"))
@@ -157,21 +156,13 @@ def windowed_event_agg(
             F.count("*").alias("n"),
         )
     )
-    q = (
-        agg.select(
-            F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "total_value",
-            "n",
-        )
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    out = agg.select(
+        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        "event_type",
+        "total_value",
+        "n",
     )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return drain_to_memory(out, sink_table, "complete")
 
 
 def stream_stream_interval_join(
@@ -188,16 +179,7 @@ def stream_stream_interval_join(
     click-watermark - lookback are evicted) — the canonical bounded-
     state stream-stream join; run to completion via availableNow and
     returned as a batch DataFrame for the oracle compare."""
-    schema = spark.read.parquet(events_path).schema
-    if os.path.isfile(events_path):
-        reader = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", os.path.basename(events_path))
-            .parquet(os.path.dirname(events_path))
-        )
-    else:
-        reader = spark.readStream.schema(schema).parquet(events_path)
-    stream = reader.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = read_file_stream(spark, events_path).withColumn("ts", F.col("ts").cast("timestamp"))
     clicks = (
         stream.filter(F.col("event_type") == "click")
         .select(F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
@@ -214,19 +196,11 @@ def stream_stream_interval_join(
         & (F.col("p_ts") >= F.col("c_ts") - F.expr(f"INTERVAL {lookback}"))
         & (F.col("p_ts") <= F.col("c_ts")),
     )
-    q = (
-        joined.select(
-            "click_id",
-            F.col("c_user").alias("user_id"),
-            F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("click_ts"),
-            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("purchase_ts"),
-            "p_value",
-        )
-        .writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    out = joined.select(
+        "click_id",
+        F.col("c_user").alias("user_id"),
+        F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("click_ts"),
+        F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("purchase_ts"),
+        "p_value",
     )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return drain_to_memory(out, sink_table, "append")

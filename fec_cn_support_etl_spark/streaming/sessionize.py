@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .pipeline import drain_to_memory, read_file_stream
+
 SESSION_SCHEMA = T.StructType(
     [
         T.StructField("user_id", T.LongType()),
@@ -110,17 +112,10 @@ def sessionize_stream(
     batch twin's trailing session per user is the difference, asserted
     in tests. ``max_files_per_trigger=1`` forces one input file per
     micro-batch (cross-batch out-of-order testing)."""
-    import os
-
     gap_us = _interval_ms(gap) * 1000
-    schema = spark.read.parquet(events_path).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    if os.path.isfile(events_path):
-        reader = reader.option("pathGlobFilter", os.path.basename(events_path))
-        events_path = os.path.dirname(events_path)
-    stream = reader.parquet(events_path).withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = read_file_stream(spark, events_path, max_files_per_trigger).withColumn(
+        "ts", F.col("ts").cast("timestamp")
+    )
     sessions = (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id")
@@ -132,15 +127,7 @@ def sessionize_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink_table)
+    return drain_to_memory(sessions, sink_table, "append")
 
 
 def sessionize_batch(events: DataFrame, gap: str = "30 minutes") -> DataFrame:

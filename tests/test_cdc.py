@@ -719,3 +719,14 @@ def test_read_columns_do_not_depend_on_scanned_files(spark, tmp_path):
     check(lambda d: t.read(include_deleted=d))
     check(lambda d: t.read_keys([("r", "p")], include_deleted=d))
     assert t.read().count() == 1
+
+
+def test_lang_normalize_udf_on_spark(spark):
+    """The lang UDF inside Spark on what the replay oracle never feeds:
+    None, padding, case, an alias and an unknown label."""
+    from fec_cn_support_etl_spark.functions.udfs import lang_normalize_udf
+
+    raw = [" Py", "RS", None, "Rust", "c++ ", "x"]
+    df = spark.createDataFrame(list(enumerate(raw)), "i INT, lang STRING")
+    got = [r["lang"] for r in df.select("i", lang_normalize_udf("lang").alias("lang")).orderBy("i").collect()]
+    assert got == ["python", "rust", None, "rust", "cpp", "x"]

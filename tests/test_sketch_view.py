@@ -15,6 +15,7 @@ from fec_cn_support_etl_spark.cdc import events as ev
 from fec_cn_support_etl_spark.cdc import runner
 from fec_cn_support_etl_spark.cdc.sketch_view import SketchView
 from fec_cn_support_etl_spark.cdc.table import LakeTable
+from fec_cn_support_etl_spark.operators.qsketch import QuantileSketch, build_day_sketches
 
 EPOCHS = 6
 
@@ -149,7 +150,13 @@ def test_null_group_key_stays_one_complete_row(spark, tmp_path):
         spark, t, str(tmp_path / "view-null"), ["grp"], distinct_col="val", quantile_col="val"
     )
     v.create()
-    # one more epoch touching both groups, then refresh through _merge
+    # one build path: the stored quantile sketch per group is the
+    # batch rollup's day sketch over the same live rows (constant day)
+    live = t.read().select("grp", F.lit(0).alias("d"), "val")
+    built = {r["grp"]: r["sketch"] for r in build_day_sketches(live, ["grp"], "d", "val").collect()}
+    stored = {r["grp"]: r["qsk"] for r in v.read().collect()}
+    assert stored == built and len(stored) == 2
+    # one more epoch touching both groups, then refresh through _fold
     upd = (
         spark.range(40, 60)
         .select(
@@ -168,6 +175,10 @@ def test_null_group_key_stays_one_complete_row(spark, tmp_path):
     assert len(rows) == 2 and None in by_grp  # exactly one row per group
     assert by_grp[None]["n_rows"] == 15 and by_grp["a"]["n_rows"] == 45
     assert by_grp[None]["q50"] is not None and by_grp[None]["approx_distinct"] > 0
+    # estimates decode the stored blob: one value per requested quantile
+    stored = {r["grp"]: QuantileSketch.from_bytes(r["qsk"]) for r in v.read().collect()}
+    for r in v.estimates([0.25, 0.5]).collect():
+        assert (r["q25"], r["q50"]) == (stored[r["grp"]].quantile(0.25), stored[r["grp"]].quantile(0.5))
 
 
 def test_heavy_hitters_view_tracks_image_stream(spark, tmp_path):
