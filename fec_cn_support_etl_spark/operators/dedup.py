@@ -5,7 +5,8 @@ substr/transform/xxhash64/explode/groupBy/self-join) so it survives
 whole-stage codegen and scales by partitioning — no Python per row.
 
 Operators, one per step:
-- exact_dedup / exact_dup_groups: hash-groupBy exact dedup.
+- exact_dedup / exact_dup_groups: sha256-keyed exact dedup (the
+  curation pipeline's dedup step) and its duplicate groups.
 - char_shingle_sets / explode_shingle_sets: distinct k-char shingle
   hashes per doc as one array row, and its exploded (id, sh) view.
 - minhash_signatures / with_sig_planes: seeded MinHash signatures via
@@ -15,12 +16,14 @@ Operators, one per step:
 - jaccard_verify_sets: exact Jaccard on candidate pairs.
 - minhash_neardup_pairs: the exact-pair pipeline — the four steps
   above in order, with the geometry constants below.
-- simhash / simhash_from_hashes: 64-bit SimHash from token hashes;
-  simhash_candidates_sym: near-dup candidates by symmetric single-bit
-  multi-probe chunks + popcount Hamming filter.
-- connected_components / neardup_clusters: near-dup clusters.
-- ngram_jaccard_pairs: exact n-gram Jaccard similarity join (small/
-  verify path).
+- simhash_from_hashes: 64-bit SimHash from token hashes (the catalog
+  feeds it char shingles); simhash_candidates_sym: near-dup candidates
+  by symmetric single-bit multi-probe chunks + popcount Hamming filter.
+- connected_components / neardup_clusters: near-dup clusters (eager:
+  one count, and a bounded driver union-find below the edge gate).
+
+Word-set Jaccard pairs are the catalog query ``word_jaccard_pairs``;
+embedding-cosine pairs are ``similarity.cosine_neardup_blocked``.
 
 Scale design (100 TB corpus): shingles are hashed to 8 bytes
 immediately (never carry strings through the shuffle); the LSH
@@ -35,6 +38,7 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import caching
 from .windows import top1_per_group
@@ -338,8 +342,9 @@ def simhash_from_hashes(toks: DataFrame, bits: int = 64) -> DataFrame:
     — cutting agg/shuffle width ~3x. Lane capacity bounds tokens at
     2^21-1 (~2M) per document, far above any real document.
 
-    Token choice is the caller's: whitespace words (``simhash``) or
-    char shingles (``explode_shingle_sets`` -> aligned with MinHash).
+    Token choice is the caller's; the catalog's SimHash feeds char
+    shingles (``explode_shingle_sets`` renamed to ``th``), aligned with
+    MinHash.
     """
     # Both the packed-lane aggregate and the 64-bit majority
     # reconstruction are built as SQL text (one F.expr each): the
@@ -362,16 +367,6 @@ def simhash_from_hashes(toks: DataFrame, bits: int = 64) -> DataFrame:
         bit_terms.append(f"shiftleft(CAST({s_i} * 2 > __n AS LONG), {i})")
     packed = F.expr(" | ".join(bit_terms) + " AS simhash")
     return agg.select("id", packed)
-
-
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
-    """(id, simhash: bigint) — whitespace-token SimHash, fully JVM-side.
-    Tokens -> xxhash64 -> ``simhash_from_hashes``."""
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok"),
-    ).withColumn("th", F.xxhash64("tok")).select("id", "th")
-    return simhash_from_hashes(toks, bits)
 
 
 def simhash_candidates_sym(
@@ -432,27 +427,41 @@ def simhash_candidates_sym(
 
 # ------------------------------------------- near-dup clusters (components)
 
+# Driver-side cost of the union-find fast path per edge: Python peak
+# (tracemalloc) over collecting the pairs, building the parent dict and
+# the output rows, on disjoint pairs (two new nodes per edge, the dict's
+# worst case): 485-492 B per edge for long ids, 509 B for 16-char
+# string ids, 407 B on a chain. The collected rows also sit once in the
+# driver JVM as 2-column rows. The gate keeps the Python side under
+# UF_DRIVER_BYTES.
+UF_EDGE_BYTES = 512
+UF_DRIVER_BYTES = 64 << 20
+
+
 def connected_components(
-    pairs: DataFrame, max_iter: int = 25, small_edge_limit: int = 2_000_000
+    pairs: DataFrame, max_iter: int = 25, small_edge_limit: int = UF_DRIVER_BYTES // UF_EDGE_BYTES
 ) -> DataFrame:
     """(id, component) for every id in ``pairs`` — component = MIN id
     reachable in the near-dup graph. The training-data dedup step after
     pair finding: pairs alone don't dedup a corpus; clusters pick one
-    canonical survivor per group (min id).
+    canonical survivor per group (min id). The ids keep the type of
+    ``pairs.id_a``.
 
-    Round 7: ``pairs`` (usually the whole expensive sketch pipeline) is
-    persisted and counted ONCE up front — the previous code built the
-    doubled edge list as ``pairs UNION swap(pairs)``, and Spark does no
-    common-subexpression elimination across union branches, so the pair
-    pipeline executed TWICE when edges first materialized. The count
-    also gates a small-graph fast path: near-dup pair sets are tiny
-    relative to the corpus (0.3% dup rate at the fixture), and below
-    ``small_edge_limit`` edges (~32 MB collected) a driver-side
-    union-find with min-id labels produces the identical fixpoint in
-    ONE job instead of 2 jobs per propagation round — the measured cost
-    of the distributed loop at fixture scale was ~5.5s of pure
-    driver/job-scheduling overhead on a 512-edge graph. Path equality
-    is pinned by tests/test_dedup.py::test_cc_small_path_equivalence.
+    EAGER: this call runs jobs before it returns. ``pairs`` (usually the
+    whole expensive sketch pipeline) is persisted and counted ONCE up
+    front — Spark does no common-subexpression elimination across the
+    branches of the doubled edge list ``pairs UNION swap(pairs)``, so an
+    uncached pair pipeline would execute twice. The count gates a
+    small-graph fast path: at most ``small_edge_limit`` edges (default
+    131,072 = ``UF_DRIVER_BYTES`` / ``UF_EDGE_BYTES``, ~64 MB of driver
+    Python heap) are collected to the driver, where a union-find with
+    min-id labels produces the identical fixpoint in ONE job instead of
+    2 jobs per propagation round — the measured cost of the distributed
+    loop at fixture scale was ~5.5s of pure driver/job-scheduling
+    overhead on a 512-edge graph. Near-dup pair sets are tiny relative
+    to the corpus (0.3% dup rate at the fixture). Path equality, for
+    long and string ids, is pinned by
+    tests/test_dedup.py::test_cc_small_path_equivalence.
 
     Distributed path (above the gate — the 100 TB shape): iterative
     min-label propagation with pointer halving — each round every node
@@ -486,13 +495,9 @@ def connected_components(
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         rows = [(x, find(x)) for x in parent]
-        spark = pairs.sparkSession
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            [T.StructField("id", T.LongType()), T.StructField("component", T.LongType())]
-        )
-        return spark.createDataFrame(rows, schema)
+        id_type = pairs.schema["id_a"].dataType
+        schema = T.StructType([T.StructField("id", id_type), T.StructField("component", id_type)])
+        return pairs.sparkSession.createDataFrame(rows, schema)
 
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     edges = edges.unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).persist()
@@ -540,41 +545,12 @@ def connected_components(
 def neardup_clusters(pairs: DataFrame) -> DataFrame:
     """(doc_id, cluster_id, is_canonical) for every doc appearing in a
     near-dup pair: cluster_id = min doc id in the connected component,
-    is_canonical marks the one survivor a dedup pass would keep."""
+    is_canonical marks the one survivor a dedup pass would keep.
+    EAGER: runs :func:`connected_components`' count, and on a small
+    graph its bounded driver collect, before it returns."""
     cc = connected_components(pairs)
     return cc.select(
         F.col("id").alias("doc_id"),
         F.col("component").alias("cluster_id"),
         (F.col("id") == F.col("component")).alias("is_canonical"),
-    )
-
-
-# -------------------------------------------------- n-gram Jaccard (exact)
-
-def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5) -> DataFrame:
-    """Exact word-n-gram Jaccard similarity join (all-pairs via shingle
-    equi-join — the exact/verify path; use minhash_neardup_pairs at scale).
-    """
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    grams = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - F.lit(n), F.lit(0))),
-            lambda i: F.xxhash64(F.concat_ws("", F.slice(toks, i + 1, n))),
-        )
-    )
-    sh = df.select(F.col(id_col).alias("id"), F.explode(grams).alias("sh"))
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, on=[F.col("a.sh") == F.col("b.sh"), F.col("a.id") < F.col("b.id")])
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n", "na"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n", "nb"), "id_b")
-        .withColumn("jaccard", F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )

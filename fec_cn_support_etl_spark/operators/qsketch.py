@@ -68,9 +68,11 @@ class QuantileSketch:
         """Insert a batch.  The concatenated level is fully re-sorted,
         so the result is a pure function of the multiset, not the
         arrival order (one sort — pre-sorting the batch would be wasted
-        work since np.sort does not exploit sorted runs)."""
+        work since np.sort does not exploit sorted runs).  ``-0.0`` is
+        stored as ``0.0``: np.sort keeps equal signed zeros in arrival
+        order, so keeping both would make the bytes order-dependent."""
         v = np.asarray(values, dtype=np.float64)
-        v = v[~np.isnan(v)]
+        v = v[~np.isnan(v)] + 0.0
         if v.size == 0:
             return self
         self.n += int(v.size)
@@ -105,12 +107,14 @@ class QuantileSketch:
     def merge(sketches: "list[QuantileSketch]", k: int | None = None) -> "QuantileSketch":
         """Fold sketches level-by-level (weights align), then compress.
         A single merge call is a pure function of the MULTISET of input
-        sketches (each level is concatenated and re-sorted before the
-        deterministic compress), so one-shot rollups are partitioning-
-        and order-invariant.  Incremental re-merging (fold yesterday's
-        rollup with today's sketch) stays within the same error bounds
-        but compresses at different boundaries, so it is semantically —
-        not byte — equal to the one-shot fold; the tests pin both."""
+        sketches (each level is concatenated, ``-0.0`` mapped to ``0.0``
+        as in ``add`` since stored blobs may predate that mapping, and
+        re-sorted before the deterministic compress), so one-shot
+        rollups are partitioning- and order-invariant.  Incremental
+        re-merging (fold yesterday's rollup with today's sketch) stays
+        within the same error bounds but compresses at different
+        boundaries, so it is semantically — not byte — equal to the
+        one-shot fold; the tests pin both."""
         ks = [s.k for s in sketches] + ([int(k)] if k else [])
         out = QuantileSketch(min(ks) if ks else DEFAULT_K)
         depth = max((len(s.levels) for s in sketches), default=1)
@@ -120,6 +124,7 @@ class QuantileSketch:
                     [s.levels[i] for s in sketches if i < len(s.levels)]
                     or [np.empty(0)]
                 )
+                + 0.0
             )
             for i in range(depth)
         ]

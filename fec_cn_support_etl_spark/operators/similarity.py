@@ -1,6 +1,7 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search and near-dup pairs over an embedding column
+(array<float>).
 
-Two paths, per the scale playbook:
+Top-k paths, per the scale playbook:
 - brute_force_topk: exact cosine top-k of every query against the
   corpus. Dot products run JVM-side (zip_with + aggregate) inside
   codegen; queries are broadcast. Baseline / ground truth.
@@ -14,6 +15,12 @@ Two paths, per the scale playbook:
   additionally probes every bucket within Hamming distance r of the
   query's bucket (r * bits extra buckets), trading candidate-set size
   for recall at high ``bits``.
+- ivf_topk: nearest-centroid cells over FP-exact integer centroids;
+  each query scans its ``nprobe`` nearest cells.
+
+Near-dup pairs: cosine_neardup_blocked is the one exact all-pairs
+path, a block self-join with one numpy matmul per block pair; the
+corpus never reaches the driver.
 
 At 100 TB the corpus side is partitioned; the broadcast-query pattern
 means NO shuffle of the corpus at all for brute force, and the LSH
@@ -238,29 +245,28 @@ def ivf_topk(
     return topk_per_group(scored, ["query_id"], _topk_order(rank_scale), k)
 
 
-def _cos_micro(a, b):
-    """Cosine quantized to integer micro-units: floor(cos * 1e6) — the
-    same quantizer as the ANN rank keys (_qcos rationale in
-    plans/catalog.py): thresholds and emitted values are insensitive to
-    sub-1e-6 float divergence between engines."""
-    return F.floor(cosine_col(a, b) * F.lit(1_000_000.0)).cast("long")
-
-
 def cosine_neardup_blocked(
     df: DataFrame, id_col: str, vec_col: str, threshold_micro: int
 ) -> DataFrame:
     """Exact all-pairs cosine membership pairs (id_a < id_b with
-    floor(cos * 1e6) >= threshold_micro) via per-partition numpy
-    block-matmul (guide §4.2: hand whole Arrow batches to vectorized
+    floor(cos * 1e6) >= threshold_micro) as a distributed block
+    self-join (guide §4.2: hand whole Arrow batches to vectorized
     native code).
 
-    A SQL self-join would evaluate an interpreted 192-term HOF fold per
-    PAIR — 384M lambda evaluations at sf0.1 (2,000 vectors -> 2M
-    pairs); here each partition runs ONE BLAS matmul of its rows against
-    the broadcast corpus matrix (n_vecs x dim doubles — the exact path's
-    inherent working set; the driver-side collect is bounded by it and
-    documented, like the k-means centroid collect). Each unordered pair
-    is emitted exactly once, from its lower-id row's partition.
+    Rows go to ``n`` blocks by pmod(xxhash64(id), n), with ``n`` the
+    input's partition count, read from its RDD: that runs no job over a
+    scan or a local relation, but over a shuffled input it runs the
+    exchange. Each block is one collect_list row; block ``p`` pairs with
+    blocks ``p..n-1`` through an equi-join on an exploded partner key,
+    so there is no nested-loop join and no broadcast of the corpus, and
+    nothing reaches the driver. One ``mapInPandas`` call per block pair
+    runs ONE float64 matmul; a SQL self-join would instead evaluate an
+    interpreted 192-term HOF fold per PAIR (384M lambda evaluations at
+    sf0.1: 2,000 vectors -> 2M pairs). Within a block a pair is emitted
+    as a < b, across blocks as (least, greatest): each unordered pair
+    comes out exactly once. The working set is one |A| x |B| double
+    matrix per block pair in one Python worker, so the input's
+    partitioning sets it.
 
     Membership is decided on floor(cos * 1e6), so summation-order
     jitter (~1e-16) matters only for a pair within one micro-unit of
@@ -270,90 +276,44 @@ def cosine_neardup_blocked(
     equals a numpy brute force over all pairs
     (tests/test_similarity.py::test_blocked_matches_exact).
     """
-    sdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    rows = sdf.collect()
-    ids_all = np.array([r["id"] for r in rows], dtype=np.int64)
-    m_all = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    n_all = np.sqrt((m_all * m_all).sum(axis=1))
-    bc = df.sparkSession.sparkContext.broadcast((ids_all, m_all, n_all))
+    n = df.rdd.getNumPartitions()
+    blocks = (
+        df.select(F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("v"))
+        .groupBy(F.pmod(F.xxhash64("id"), F.lit(n)).alias("blk"))
+        .agg(F.collect_list(F.struct("id", "v")).alias("rows"))
+        .select("blk", F.col("rows.id").alias("ids"), F.col("rows.v").alias("vs"))
+        # the join infers this filter on its build side; stating it on
+        # both sides keeps their block aggregations identical, so the
+        # corpus is scanned and shuffled once (ReusedExchange)
+        .filter(F.col("blk").isNotNull())
+    )
+    left = blocks.select(
+        F.col("blk").alias("pa"),
+        F.col("ids").alias("ids_a"),
+        F.col("vs").alias("vs_a"),
+        F.explode(F.sequence("blk", F.lit(n - 1).cast("long"))).alias("pb"),
+    )
+    # the hint keeps the block table off the broadcast path: under the
+    # size threshold the planner would otherwise broadcast the corpus
+    right = blocks.select(
+        F.col("blk").alias("pb"), F.col("ids").alias("ids_b"), F.col("vs").alias("vs_b")
+    ).hint("shuffle_hash")
+
+    def mat_norms(vs):
+        m = np.stack(vs).astype(np.float64)
+        return m, np.sqrt((m * m).sum(axis=1))
 
     def gen(batches):
-        b_ids, b_m, b_n = bc.value
         for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array([list(v) for v in pdf["v"]], dtype=np.float64)
-            xid = pdf["id"].to_numpy(dtype=np.int64)
-            xn = np.sqrt((x * x).sum(axis=1))
-            micro = np.floor((x @ b_m.T) / np.outer(xn, b_n) * 1_000_000.0)
-            ia, ib = np.nonzero(micro >= threshold_micro)
-            a, b = xid[ia], b_ids[ib]
-            keep = a < b
-            yield pd.DataFrame({"id_a": a[keep], "id_b": b[keep]})
+            cols = pdf[["pa", "pb", "ids_a", "vs_a", "ids_b", "vs_b"]]
+            for pa, pb, ids_a, vs_a, ids_b, vs_b in cols.itertuples(index=False):
+                (a, na), (b, nb) = mat_norms(vs_a), mat_norms(vs_b)
+                micro = np.floor((a @ b.T) / np.outer(na, nb) * 1_000_000.0)
+                ia, ib = np.nonzero(micro >= threshold_micro)
+                x, y = ids_a.astype(np.int64)[ia], ids_b.astype(np.int64)[ib]
+                if pa == pb:
+                    keep = x < y
+                    x, y = x[keep], y[keep]
+                yield pd.DataFrame({"id_a": np.minimum(x, y), "id_b": np.maximum(x, y)})
 
-    return sdf.mapInPandas(gen, "id_a long, id_b long")
-
-
-def cosine_neardup_chunked(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    planes,
-    chunks: int,
-    threshold_micro: int,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs at scale: sign-signature chunk
-    buckets generate candidates, exact cosine verifies them.
-
-    Each row's ``bits``-bit hyperplane signature (FP-exact via
-    ``int_planes`` — see module docstring) splits into ``chunks``
-    groups; rows sharing ANY chunk value become a candidate pair
-    (equi-join per chunk — never a cross product). Pigeonhole: a true
-    pair is missed only if every chunk differs, so pairs within
-    signature-Hamming <= chunks-1 are captured with CERTAINTY; the
-    only probabilistic step is cosine -> signature Hamming
-    (P[bit differs] = theta/pi per plane), which concentrates hard for
-    genuine near-dups (cos >= 0.9 at 24 bits: E[Hamming] ~ 3.4).
-    Verify touches candidates only, with the same integer-micro
-    threshold as the exact path — on captured pairs the two paths are
-    bit-identical.
-
-    Scale shape: one shuffle of (chunk, value)-keyed signature rows;
-    join keys are hashes (uniform, skew-free); the quadratic blowup is
-    bounded per bucket, exactly the MinHash-LSH economics."""
-    bits = len(planes)
-    width = bits // chunks
-    assert width * chunks == bits, "chunks must divide len(planes)"
-    t = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    sig = t.withColumn("bucket", hyperplane_bucket_expr("v", planes))
-    chunk_arr = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("bucket"), c * width).bitwiseAND(F.lit((1 << width) - 1)).alias("val"),
-            )
-            for c in range(chunks)
-        ]
-    )
-    ct = sig.select("id", F.explode(chunk_arr).alias("c")).select("id", "c.chunk", "c.val")
-    cand = (
-        ct.alias("a")
-        .join(
-            ct.alias("b"),
-            on=[
-                F.col("a.chunk") == F.col("b.chunk"),
-                F.col("a.val") == F.col("b.val"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    va = t.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    vb = t.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
-    return (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", _cos_micro(F.col("va"), F.col("vb")).alias("cos_micro"))
-        .filter(F.col("cos_micro") >= F.lit(int(threshold_micro)))
-    )
+    return left.join(right, "pb").mapInPandas(gen, "id_a long, id_b long")

@@ -34,6 +34,7 @@ from ..functions.scalar import dec, money
 from ..operators.aggregates import conditional_sum_pivot, horizontal_total
 from ..operators.dedup import (
     char_shingle_sets,
+    exact_dedup,
     exact_dup_groups,
     explode_shingle_sets,
     jaccard_verify_sets,
@@ -1704,7 +1705,9 @@ def neardup_clusters_q(spark, sf_dir):
     — O(component diameter) rounds, one shuffle per round); oracle:
     recursive-CTE reachability over the same pairs. This is the
     operator a 100-TB corpus dedup actually ends with — keep
-    is_canonical, drop the rest."""
+    is_canonical, drop the rest. EAGER: building the query runs the
+    pair pipeline (connected_components' count, then its bounded driver
+    collect of a small pair graph)."""
     pairs = minhash_neardup_pairs(_ts(spark, sf_dir), bands=16).select("id_a", "id_b")
     return neardup_clusters(pairs)
 
@@ -1917,19 +1920,16 @@ def embedding_cosine_neardup_q(spark, sf_dir):
     threshold; at sf0.1 no pair lies within 89 micro-units of it,
     far beyond the cross-engine float jitter, so membership is
     engine-exact; the emitted columns are the membership pairs — the
-    dedup deliverable). This is the exact all-pairs path, honest
-    ground truth at fixture scale; the scale path is
-    cosine_neardup_chunked (sign-signature chunk buckets -> exact
-    cosine verify on candidates only, pigeonhole-guaranteed capture to
-    signature-Hamming chunks-1), recall-pinned on planted near-dups in
-    tests/test_similarity.py."""
+    dedup deliverable). This is the exact all-pairs path:
+    operators/similarity.py::cosine_neardup_blocked, a block self-join
+    with one numpy matmul per block pair, pinned against a numpy brute
+    force in tests/test_similarity.py."""
     from ..operators.similarity import cosine_neardup_blocked
 
-    # round 7: per-partition numpy block-matmul against the broadcast
-    # corpus matrix instead of 2M interpreted 192-term HOF folds
-    # (4.4s -> 0.6s at sf0.1); membership pinned against a numpy
-    # brute force and the DuckDB oracle.
-    emb = _ts(spark, sf_dir, "embeddings")
+    # one block per scan split: the unspread scan, because reading the
+    # partition count of a spread input would run its round-robin
+    # exchange while the query is being built
+    emb = _t(spark, sf_dir, "embeddings")
     return cosine_neardup_blocked(emb, "vec_id", "embedding", 400200)
 
 
@@ -1950,8 +1950,10 @@ def embedding_cosine_neardup_q(spark, sf_dir):
 def doc_fingerprints_q(spark, sf_dir):
     """Winnowing rolling-hash fingerprints (md5-hex hash: fixed-width
     lowercase hex min == numeric min in every engine, so the window-min
-    selection is engine-exact)."""
-    d = _ts(spark, sf_dir).filter(F.col("doc_id") < 100)
+    selection is engine-exact). The 100-doc slice is filtered on the
+    plain scan: spreading it first would add a round-robin exchange
+    (and a job) for 100 rows."""
+    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     return doc_fingerprints(d, "doc_id", "text", hash_fn="md5").select(
         F.col("id").alias("doc_id"), "fingerprint"
     )
@@ -2248,8 +2250,9 @@ def stream_stream_join_q(spark, sf_dir):
 def curation_pipeline(spark, sf_dir):
     """End-to-end corpus curation as ONE lazy plan — the composition an
     LLM-data user actually runs: quality score -> threshold, lang-ID ->
-    'en' only, exact dedup (sha256 canonical = min doc_id), 50%
-    deterministic hash sample, emit (doc_id, n_tokens, quality).
+    'en' only, 50% deterministic hash sample, exact dedup
+    (``exact_dedup``: sha256 digest, lowest doc_id kept), emit (doc_id,
+    n_tokens, quality).
     Catalyst fuses the per-doc scoring into a single scan projection;
     the only shuffle is the dedup window on the content digest. Every
     stage reuses the already-oracled operators, so the composed output
@@ -2263,11 +2266,7 @@ def curation_pipeline(spark, sf_dir):
     sampled = stratified_sample(
         filt.withColumn("__one", F.lit("x")), "__one", {"x": 0.5}, id_cols=["doc_id"]
     )
-    w = Window.partitionBy(F.sha2("text", 256))
-    dedup = sampled.withColumn("__canon", F.min("doc_id").over(w)).filter(
-        F.col("doc_id") == F.col("__canon")
-    )
-    return dedup.select("doc_id", "n_tokens", "quality")
+    return exact_dedup(sampled, "text", "doc_id").select("doc_id", "n_tokens", "quality")
 
 
 @_q(
@@ -3310,7 +3309,9 @@ def neardup_soft_dedup(spark, sf_dir):
     coalesce to their own id) -> per-cluster rollup.  100-TB shape:
     everything downstream of pair finding touches (doc_id, cluster_id,
     tok) triples only — text never crosses a shuffle after the shingle
-    stage; the rollup partial-combines."""
+    stage; the rollup partial-combines. EAGER: building the query runs
+    the pair pipeline (connected_components' count, then its bounded
+    driver collect of a small pair graph)."""
     d = _ts(spark, sf_dir)
     pairs = minhash_neardup_pairs(d, bands=16).select("id_a", "id_b")
     memb = neardup_clusters(pairs).select("doc_id", "cluster_id")

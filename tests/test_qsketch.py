@@ -54,6 +54,15 @@ def test_sketch_is_pure_function_of_multiset():
     rng = np.random.default_rng(5)
     c = QuantileSketch().add(rng.permutation(data))
     assert a.to_bytes() == b.to_bytes() == c.to_bytes()
+    # signed zeros: -0.0 is stored as 0.0, so neither arrival order nor
+    # merge order shows in the bytes; ``old`` holds -0.0 as a blob
+    # written before that mapping would
+    assert QuantileSketch().add([0.0, -0.0, 1.0]).to_bytes() == QuantileSketch().add([-0.0, 0.0, 1.0]).to_bytes()
+    old = QuantileSketch()
+    old.levels, old.n = [np.array([-0.0])], 1
+    for neg in (QuantileSketch().add([-0.0]), old):
+        pos = QuantileSketch().add([0.0])
+        assert QuantileSketch.merge([pos, neg]).to_bytes() == QuantileSketch.merge([neg, pos]).to_bytes()
     # chunked insertion differs from one-shot in compaction boundaries,
     # but must still meet the bound
     d = QuantileSketch()

@@ -134,33 +134,15 @@ def test_ivf_topk_recall_and_exhaustive_probe(spark, emb, emb_np):
     assert sum(r2) / 10 >= 0.15  # 2 of 8 cells probed
 
 
-def test_embedding_neardup_finds_duplicated_vectors(spark, emb):
-    dup = emb.filter(F.col("vec_id") < 3).withColumn("vec_id", F.col("vec_id") + 100000)
-    with_dups = emb.unionByName(dup)
-    planes = S.int_planes(dim=64, bits=24, seed=3)
-    pairs = S.cosine_neardup_chunked(
-        with_dups, "vec_id", "embedding", planes, chunks=6, threshold_micro=999_000
-    )
-    got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-    # exact copies share every signature chunk — capture is certain
-    for q in (0, 1, 2):
-        assert (q, q + 100000) in got
+def test_blocked_builds_lazily_and_pairs_across_blocks(spark):
+    """Building the blocked near-dup frame runs no Spark job, and the
+    module holds no driver collect and no SparkContext broadcast. Over
+    a local relation (one block per partition, so most planted pairs
+    cross blocks) the pairs equal the numpy brute force, each emitted
+    once, through a shuffled join that broadcasts nothing."""
+    import inspect
 
-
-def test_cosine_neardup_chunked_captures_planted(spark):
-    """The scale path for embedding near-dup: planted near-identical
-    vectors (cos >= ~0.99) must ALL surface through the chunk-bucket
-    candidates (pigeonhole capture to signature-Hamming <= chunks-1;
-    at 24 bits / cos 0.99 the expected Hamming is ~1), with no pair the
-    numpy all-pairs brute force rejects and each value within one
-    micro-unit of it (JVM fold vs BLAS summation order)."""
-    import numpy as np
     from sketch_oracle import cosine_pairs_micro
-
-    from fec_cn_support_etl_spark.operators.similarity import (
-        cosine_neardup_chunked,
-        int_planes,
-    )
 
     rs = np.random.RandomState(7)
     base = rs.randn(200, 32).astype("float32")
@@ -171,16 +153,24 @@ def test_cosine_neardup_chunked_captures_planted(spark):
         rows.append((1000 + j, dup.tolist()))
         planted.append((j, 1000 + j))
     emb = spark.createDataFrame(rows, ["vec_id", "embedding"])
+    assert emb.rdd.getNumPartitions() > 1
 
-    planes = int_planes(dim=32, bits=24, seed=3)
-    exact = cosine_pairs_micro([r[0] for r in rows], [r[1] for r in rows], 950_000)
-    chunked = {(r["id_a"], r["id_b"]): r["cos_micro"]
-               for r in cosine_neardup_chunked(emb, "vec_id", "embedding", planes, chunks=6, threshold_micro=950_000).collect()}
-    assert set(planted) <= set(exact), "fixture broke: planted pairs not above threshold"
-    assert set(planted) <= set(chunked), "chunk buckets missed a planted near-dup"
-    assert set(chunked) <= set(exact)  # verify stage: no false positives
-    for p in chunked:
-        assert abs(chunked[p] - exact[p]) <= 1
+    sc = spark.sparkContext
+    sc.setJobGroup("blocked-build", "build cosine_neardup_blocked")
+    try:
+        pairs = S.cosine_neardup_blocked(emb, "vec_id", "embedding", 950_000)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("blocked-build")) == 0
+    src = inspect.getsource(S)
+    assert ".collect()" not in src and "sparkContext.broadcast" not in src
+
+    got = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
+    want = set(cosine_pairs_micro([r[0] for r in rows], [r[1] for r in rows], 950_000))
+    assert len(got) == len(set(got)), "a pair was emitted twice"
+    assert set(got) == want and set(planted) <= want
+    executed = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "ShuffledHashJoin" in executed and "Broadcast" not in executed
 
 
 def test_blocked_matches_exact(spark):
